@@ -34,8 +34,6 @@ def main() -> None:
 
     from jam_spark._persist import release_all
     from jam_spark.ops import dedup, similarity, text
-    from jam_spark.params import SketchParams
-    from jam_spark.pipeline import dedup_pipeline
     from jam_spark.session import get_spark
 
     spark = get_spark(app="jam_bench_extra", cores=CPUS, shuffle_partitions=CPUS)

@@ -23,6 +23,9 @@ Resume contract:
 - a params mismatch is an ERROR, mirroring the reference's refusal to
   compare sketches with unequal k/fscale
   (``/root/reference/src/compare.rs:106-112,267-288``);
+- a stage table in an older layout (bands without the packed ``bkey``,
+  pairs without the ``batch`` epoch) is an ERROR too: such a root is
+  rebuilt, not migrated;
 - appended input is processed INCREMENTALLY end-to-end (the 100 TB
   concern: a daily ingest must cost O(delta), not O(corpus)):
   * sketches: new pages (left_anti on known urls) are sketched and
@@ -62,6 +65,9 @@ from .params import SketchParams
 from .pipeline import pairs_stage, sketch_stage
 
 STAGES = ("sketches", "membership", "bands", "pairs", "clusters")
+#: stage → a column its table has carried since r6 (packed band key;
+#: pairs epoch stamp). A table without it was written by older code.
+_CURRENT_LAYOUT = {"bands": "bkey", "pairs": "batch"}
 #: side tables: per-stage nid watermarks (which reps a stage has
 #: processed — the append-idempotent alternative to invalidation) and
 #: the previous clusters snapshot feeding incremental CC
@@ -129,20 +135,6 @@ class _ParquetStore:
     def read(self, stage: str) -> DataFrame:
         return self.spark.read.parquet(self.path(stage))
 
-    def replace(self, df: DataFrame, stage: str, props: dict) -> DataFrame:
-        """Rewrite a stage table from a plan that READS the same table
-        (schema migrations). A direct overwrite would delete the input
-        files out from under the scan; stage through a sibling tmp dir
-        and swap."""
-        import shutil
-
-        tmp = self.path(stage) + ".__tmp__"
-        shutil.rmtree(tmp, ignore_errors=True)
-        df.write.mode("overwrite").parquet(tmp)
-        shutil.rmtree(self.path(stage), ignore_errors=True)
-        os.replace(tmp, self.path(stage))
-        return self.read(stage)
-
     def invalidate(self, stage: str) -> None:
         import shutil
 
@@ -180,11 +172,6 @@ class _IcebergStore:
 
     def read(self, stage: str) -> DataFrame:
         return self.spark.read.table(self.tbl(stage))
-
-    def replace(self, df: DataFrame, stage: str, props: dict) -> DataFrame:
-        # Iceberg's createOrReplace is snapshot-isolated: the plan reads
-        # the pre-replace snapshot, so self-referential rewrites are safe
-        return self.write(df, stage, props)
 
     def invalidate(self, stage: str) -> None:
         self.spark.sql(f"DROP TABLE IF EXISTS {self.tbl(stage)}")
@@ -312,7 +299,18 @@ class CheckpointedDedup:
         return n
 
     def _read(self, stage: str) -> DataFrame:
-        return self.store.read(stage)
+        df = self.store.read(stage)
+        col = _CURRENT_LAYOUT.get(stage)
+        if col and col not in df.columns:
+            # pre-r6 layouts (unpacked (band_id, band_hash) postings, or
+            # pairs without the batch epoch) are not migrated: resuming
+            # on them would silently mix key formats or epochs
+            raise ValueError(
+                f"checkpoint at {self.root} has a {stage} table without "
+                f"the {col!r} column (an older layout that is no longer "
+                "migrated), refusing to resume — rebuild it from the pages"
+            )
+        return df
 
     def _invalidate(self, *stages: str) -> None:
         """Remove stage tables (and their metrics) whose inputs changed —
@@ -407,44 +405,13 @@ class CheckpointedDedup:
         )
         epoch = 0
         if self._done("pairs"):
-            pairs = self._read("pairs")
-            if "batch" in pairs.columns:
-                epoch = (
-                    pairs.agg(F.max("batch").alias("b")).collect()[0]["b"]
-                    or 0
-                )
+            epoch = (
+                self._read("pairs").agg(F.max("batch").alias("b"))
+                .collect()[0]["b"]
+                or 0
+            )
         with open(os.path.join(self.root, "clusters_base_meta.json"), "w") as f:
             json.dump({"epoch": epoch}, f)
-
-    def _migrate_bands_to_bkey(self, bands: DataFrame) -> DataFrame:
-        """One-shot migration of a pre-r6 (nid, band_id, band_hash)
-        postings table to the packed (bkey, nid) shape the in-memory
-        ``pairs_stage`` has used since r4 (same 1.39x-measured key:
-        band_id in the top 6 bits, band_hash truncated to the low 58 —
-        identical values to what ``packed_bands`` emits, so a migrated
-        table equals a freshly built one row-for-row).
-
-        The migration also closes the r5-ADVICE upgrade-path window: a
-        root written by PRE-intent-marker code whose last append crashed
-        between the physical append and the watermark write has no
-        marker, so the marker gate alone would skip the idempotency
-        anti-join and duplicate postings. Any still-unpacked table is by
-        definition from a pre-r6 epoch, so the rewrite de-duplicates
-        rows outright — the migrated table starts clean no matter which
-        code wrote it."""
-        from .pairs import _BKEY_MASK
-
-        packed = bands.select(
-            F.shiftleft(F.col("band_id").cast("long"), 58)
-            .bitwiseOR(F.col("band_hash").bitwiseAND(F.lit(_BKEY_MASK)))
-            .alias("bkey"),
-            "nid",
-        ).distinct()
-        return self.store.replace(
-            packed.repartition("bkey").sortWithinPartitions("bkey"),
-            "bands",
-            {"jam.params": self.params.to_json()},
-        )
 
     def run_bands(self, sketches: DataFrame) -> DataFrame:
         """Materialize the banded postings table — the persisted analogue
@@ -457,9 +424,7 @@ class CheckpointedDedup:
         append and the new-vs-all candidate join run on one 8-byte key
         (r5 VERDICT #5). Sorted within partitions on bkey before write,
         mirroring the reference's sorted bulk load (BTreeMap staging +
-        APPEND_DUP) and giving parquet run-length friendly pages; a
-        pre-r6 unpacked table is migrated once on first contact
-        (:meth:`_migrate_bands_to_bkey`).
+        APPEND_DUP) and giving parquet run-length friendly pages.
 
         Incremental: when the table exists, only sketches whose nid is
         past the ``band_nids`` watermark are banded and APPENDED — the
@@ -474,8 +439,6 @@ class CheckpointedDedup:
         sk = with_nid(sketches)
         if self._done("bands"):
             bands = self._read("bands")
-            if "bkey" not in bands.columns:
-                bands = self._migrate_bands_to_bkey(bands)
             known = (
                 self._read("band_nids")
                 if self._done("band_nids")
@@ -564,21 +527,6 @@ class CheckpointedDedup:
         sk = with_nid(sketches)
         if self._done("pairs"):
             pairs = self._read("pairs")
-            if "batch" not in pairs.columns:
-                # legacy pairs table from before batch stamping: backfill
-                # batch=0 once (via a tmp-dir swap — the plan reads the
-                # table being rewritten) so the epoch probe below, the
-                # appended delta, and run_clusters' epoch filter all see
-                # ONE schema. Without this the first incremental append
-                # on an old checkpoint raised AnalysisException at the
-                # max("batch") probe, and a plain parquet append of
-                # batch-stamped files would hide the new column behind
-                # the legacy schema on read.
-                pairs = self.store.replace(
-                    pairs.withColumn("batch", F.lit(0).cast("long")),
-                    "pairs",
-                    {"jam.params": self.params.to_json()},
-                )
             known = (
                 self._read("pair_nids")
                 if self._done("pair_nids")
@@ -592,7 +540,7 @@ class CheckpointedDedup:
             if new_ids.limit(1).count() == 0:
                 return pairs
             t0 = time.time()
-            if bands is None or "bkey" not in bands.columns:
+            if bands is None:
                 bands = self.run_bands(sketches)
             # new-vs-all candidate join on the packed 8-byte bkey — the
             # same single-key join shape the in-memory pairs stage uses
@@ -667,11 +615,9 @@ class CheckpointedDedup:
             with open(meta_path) as f:
                 base_epoch = json.load(f)["epoch"]
             base = self._read("clusters_base")
-            delta_edges = (
-                pairs.filter(F.col("batch") > base_epoch)
-                if "batch" in pairs.columns
-                else pairs
-            ).select(*edge_cols)
+            delta_edges = pairs.filter(F.col("batch") > base_epoch).select(
+                *edge_cols
+            )
             # star edges over REPS only (exact-dup members re-attach via
             # membership below, as always) — O(reps) edges; labels are
             # min member urls and rep = min of its exact group, so rep
@@ -751,11 +697,7 @@ class CheckpointedDedup:
         if self._done("bands"):
             b = self._read("bands")
             s["n_postings"] = b.count()
-            s["n_band_keys"] = (
-                b.select("bkey").distinct().count()
-                if "bkey" in b.columns
-                else b.select("band_id", "band_hash").distinct().count()
-            )
+            s["n_band_keys"] = b.select("bkey").distinct().count()
         if self._done("pairs"):
             s["n_pairs"] = self._read("pairs").count()
         if self._done("clusters"):

@@ -15,21 +15,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .._persist import track
+from ..pairs import cap_hot_keys
 from ..params import SketchParams
 from ..pipeline import dedup_pipeline, pairs_stage, sketch_stage
+from ..scan import ensure_scan_parallelism
 from .text import _TOKENS, _tokens_col
 
 
-def _ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Map-heavy ops compute inside the scan stage; a pathological input
-    (one small parquet file) would serialize them. The guard estimates
-    splits from driver-side file metadata — no ``df.rdd`` probe, which
-    cost a second analysis/planning pass per operator call — and
-    repartitions only when under-parallel; at 100TB inputs always carry
-    >= cores splits and this is a no-op (see jam_spark.scan)."""
-    from ..scan import ensure_scan_parallelism
-
-    return ensure_scan_parallelism(df)
+def _drop_hot_keys(df: DataFrame, key: str, max_count: int) -> DataFrame:
+    """Drop every row whose ``key`` occurs in more than ``max_count``
+    rows — the inverted-index skew guard (a key shared by m rows is an
+    m² self-join). Counts come from a map-side-combined partial
+    aggregate; only the (few) hot keys are broadcast back into a
+    left-anti join, with no window over the hot key."""
+    hot = (
+        df.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") > max_count)
+        .select(key)
+    )
+    return df.join(F.broadcast(hot), key, "left_anti")
 
 
 # ---------------------------------------------------------------- exact
@@ -128,9 +133,9 @@ def ngram_jaccard_pairs(
     Skew guard (the 100 TB concern): a gram shared by m docs produces m²
     join rows, and web boilerplate grams reach m in the millions. Grams
     with document frequency > ``max_df`` are dropped from BOTH the
-    numerator and the denominator (df counts come from a map-side-combined
-    partial aggregate; the hot-gram set is broadcast, mirroring
-    ``thin_hot_bands``) — a gram in thousands of docs carries no Jaccard
+    numerator and the denominator (:func:`_drop_hot_keys`: df counts
+    come from a map-side-combined partial aggregate and the hot-gram set
+    is broadcast) — a gram in thousands of docs carries no Jaccard
     signal. The SQL oracle applies the identical cap, so parity holds at
     every scale; pair work is bounded at O(n_grams × max_df²/2).
     """
@@ -150,17 +155,11 @@ def ngram_jaccard_pairs(
     # explodes for this query
     # (plans/r06/ngram_jaccard_pairs_before.txt).
     raw = track(
-        _ensure_parallelism(documents)
+        ensure_scan_parallelism(documents)
         .select("doc_id", F.explode(_ngrams_col(n)).alias("gram"))
         .repartition("gram")
     )
-    hot = (
-        raw.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("gram")
-    )
-    grams = raw.join(F.broadcast(hot), "gram", "left_anti")
+    grams = _drop_hot_keys(raw, "gram", max_df)
     sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     g1 = grams.select(F.col("doc_id").alias("doc_a"), "gram")
     g2 = grams.select(F.col("doc_id").alias("doc_b"), "gram")
@@ -261,7 +260,7 @@ def source_ngram_overlap(
     reach aggregate and both self-join sides are exchange-free over the
     cache.
     """
-    docs = _ensure_parallelism(documents)
+    docs = ensure_scan_parallelism(documents)
     # explode is per-doc distinct (array_distinct); the corpus-level
     # distinct collapses same-source repeats so count(1) per gram below
     # IS the gram's distinct-source reach. The distinct runs ON TOP of
@@ -276,13 +275,7 @@ def source_ngram_overlap(
         .repartition("gram")
         .distinct()
     )
-    hot = (
-        sg.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("reach"))
-        .filter(F.col("reach") > max_sources)
-        .select("gram")
-    )
-    grams = sg.join(F.broadcast(hot), "gram", "left_anti")
+    grams = _drop_hot_keys(sg, "gram", max_sources)
     sizes = grams.groupBy("source").agg(F.count(F.lit(1)).alias("sz"))
     g1 = grams.select(F.col("source").alias("source_a"), "gram")
     g2 = grams.select(F.col("source").alias("source_b"), "gram")
@@ -389,7 +382,7 @@ def decontaminate(
     the join-fan-out skew risk — same guard as ngram_jaccard_pairs).
     The SQL twin applies the identical cap.
     """
-    docs = _ensure_parallelism(documents)
+    docs = ensure_scan_parallelism(documents)
     is_bench = (F.col("doc_id") % modulus) == residue
     # _ngrams_col is array_distinct per doc — explode output is already
     # (doc_id, gram)-distinct. ONE scan+explode+gram-exchange carrying
@@ -406,14 +399,10 @@ def decontaminate(
         ).repartition("gram")
     )
     bench = grams.filter(F.col("is_bench")).select("gram").distinct()
-    train0 = grams.filter(~F.col("is_bench")).select("doc_id", "gram")
-    hot = (
-        train0.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("gram")
+    train = _drop_hot_keys(
+        grams.filter(~F.col("is_bench")).select("doc_id", "gram"),
+        "gram", max_df,
     )
-    train = train0.join(F.broadcast(hot), "gram", "left_anti")
     sizes = train.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     # the benchmark-gram probe is NOT force-broadcast (r5 VERDICT
     # foot-gun: F.broadcast overrode the size threshold, so a
@@ -511,7 +500,7 @@ def training_funnel(
     """
     from .text import quality_filter
 
-    docs = _ensure_parallelism(documents)
+    docs = ensure_scan_parallelism(documents)
     key = F.coalesce(F.md5("text"), F.lit("<null>"))
     base = docs.select(
         F.col("doc_id").cast("long").alias("doc_id"), key.alias("text_fp")
@@ -898,12 +887,9 @@ def simhash_dup_pairs(
             )
         ).alias("bkey"),
     )
-    if band_cap:
-        from .similarity import thin_hot_buckets
-
-        bands = thin_hot_buckets(
-            bands.withColumnRenamed("bkey", "bucket"), band_cap, id_col="fpl"
-        ).withColumnRenamed("bucket", "bkey")
+    bands = cap_hot_keys(
+        bands, "bkey", band_cap, "fpl", anchor=F.xxhash64("bkey")
+    )
     cand = (
         bands.alias("x")
         .join(bands.alias("y"), "bkey")
@@ -1028,19 +1014,22 @@ def simhash_mirror_groups_sql() -> str:
 
 # ----------------------------------------------- minhash-LSH (the core)
 
-def documents_as_pages(documents: DataFrame) -> DataFrame:
-    """Adapt the documents table to the pipeline's pages contract.
+def _as_pages(documents: DataFrame, *extra_cols: str) -> DataFrame:
+    """Adapt the documents table to the pipeline's (url, text) pages
+    contract, carrying ``extra_cols`` along.
 
     doc_ids are zero-padded so the pipeline's lexicographic min-url
     cluster labels coincide with numeric-min doc_ids."""
     return documents.select(
-        F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("url"), "text"
+        F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("url"),
+        "text",
+        *extra_cols,
     )
 
 
 def minhash_sketches(documents: DataFrame, params: SketchParams | None = None) -> DataFrame:
     params = params or SketchParams()
-    sketches, _ = sketch_stage(documents_as_pages(documents), params)
+    sketches, _ = sketch_stage(_as_pages(documents), params)
     return sketches.select(
         F.col("url").cast("long").alias("doc_id"),
         F.col("num_hashes").cast("long"),
@@ -1049,7 +1038,7 @@ def minhash_sketches(documents: DataFrame, params: SketchParams | None = None) -
 
 def minhash_pairs(documents: DataFrame, params: SketchParams | None = None) -> DataFrame:
     params = params or SketchParams()
-    sketches, _ = sketch_stage(documents_as_pages(documents), params)
+    sketches, _ = sketch_stage(_as_pages(documents), params)
     p = pairs_stage(track(sketches), params)
     return p.select(
         F.col("id_a").cast("long").alias("doc_a"),
@@ -1069,7 +1058,7 @@ def minhash_pairs_allpairs(
     from ..pairs import all_pairs_compare
 
     params = (params or SketchParams()).with_(scorer="allpairs", cutoff=30.0)
-    sketches, _ = sketch_stage(documents_as_pages(documents), params)
+    sketches, _ = sketch_stage(_as_pages(documents), params)
     p = all_pairs_compare(track(sketches), params)
     return p.select(
         F.col("id_a").cast("long").alias("doc_a"),
@@ -1088,11 +1077,7 @@ def minhash_merge_by_source(
     from ..sketch import merge_sketches
 
     params = params or SketchParams()
-    pages = documents.select(
-        F.lpad(F.col("doc_id").cast("string"), 12, "0").alias("url"),
-        "text",
-        "source",
-    )
+    pages = _as_pages(documents, "source")
     sketches, _ = sketch_stage(pages, params, dedup_exact_first=False)
     joined = sketches.join(pages.select("url", "source"), "url")
     return merge_sketches(joined, "source", params).select(
@@ -1102,7 +1087,7 @@ def minhash_merge_by_source(
 
 def minhash_clusters(documents: DataFrame, params: SketchParams | None = None) -> DataFrame:
     params = params or SketchParams()
-    out = dedup_pipeline(documents_as_pages(documents), params)
+    out = dedup_pipeline(_as_pages(documents), params)
     return out.select(
         F.col("url").cast("long").alias("doc_id"),
         F.col("cluster_id").cast("long").alias("cluster_id"),
@@ -1902,7 +1887,7 @@ def _corpus_lines(documents: DataFrame) -> DataFrame:
     the per-doc reassembly groupBy. Spark's regex split with default
     limit -1 keeps trailing empties — byte-parity with DuckDB's
     string_split."""
-    return _ensure_parallelism(documents).select(
+    return ensure_scan_parallelism(documents).select(
         "doc_id",
         F.posexplode(F.split(F.coalesce("text", F.lit("")), "\n")).alias(
             "pos", "line"
@@ -2141,7 +2126,7 @@ def shard_plan(
     # non-overlapping, which the monotone bucket→pid map guarantees.
     # start_offset/shard_id are IDENTICAL: global (bucket, doc_id)
     # order is unchanged.
-    tok = _ensure_parallelism(documents).select(
+    tok = ensure_scan_parallelism(documents).select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.substring(
             F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))),
@@ -2302,16 +2287,10 @@ def winnow_dup_pairs(
     # subtree, plans/r06/winnow_dup_pairs_before.txt); see the plan
     # note on ngram_jaccard_pairs for the partitioning rationale.
     fps = track(
-        winnow_doc_fps(_ensure_parallelism(documents), k=k, w=w)
+        winnow_doc_fps(ensure_scan_parallelism(documents), k=k, w=w)
         .repartition("fp")
     )
-    hot = (
-        fps.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > max_df)
-        .select("fp")
-    )
-    kept = fps.join(F.broadcast(hot), "fp", "left_anti")
+    kept = _drop_hot_keys(fps, "fp", max_df)
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     p1 = kept.select(F.col("doc_id").alias("doc_a"), "fp")
     p2 = kept.select(F.col("doc_id").alias("doc_b"), "fp")

@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 
 from .._persist import track
 from ..hashes import M64, xxh3_u64
+from ..pairs import cap_hot_keys
 from ..scan import exact_count
 
 
@@ -469,62 +470,6 @@ def auto_n_planes(n_vectors: int, target_bucket: int = 128) -> int:
     return max(4, min(24, math.ceil(math.log2(max(2.0, n_vectors / target_bucket)))))
 
 
-def thin_hot_buckets(
-    buckets: DataFrame, bucket_cap: int, id_col: str = "vec_id"
-) -> DataFrame:
-    """Deterministically cap hot LSH buckets — the embedding-space port
-    of :func:`jam_spark.pairs.thin_hot_bands` (same rotation-residue
-    scheme, keyed on the bucket id).
-
-    ``auto_n_planes`` bounds only the EXPECTED bucket (n/2^p): real
-    embedding corpora have mass points — duplicate embeddings, zero
-    vectors, model collapse modes — that drop millions of vectors into
-    ONE bucket at any plane count, and the bucket self-join is then m²
-    with no guard. A member survives bucket b iff
-    ``xxhash64(vec_id) % mod`` ∈ {b % mod, (b+1) % mod} with
-    ``mod = ceil(size/cap)``: every surviving bucket holds ≈ 2·cap
-    members (two adjacent residue classes), so per-bucket join work is
-    O(cap²) regardless of the mass-point size. The surviving residue
-    pair is anchored at ``xxhash64(bucket) % mod`` — NOT ``bucket %
-    mod``: a vector's n_tables bucket ids differ only in their high
-    (table-index) bits, so raw-mod residues collapse to ~2 distinct
-    pairs across all tables, while the hashed anchor decorrelates per
-    table. Coverage is then probabilistic: a mass-point member survives
-    ≥1 of its tables with p = 1-(1-2/mod)^n_tables (≈99.5% at the
-    default cap's mod=10, 24 tables) — the honest price of bounding an
-    adversarial m² join; raise bucket_cap if total coverage of
-    million-wide mass points matters more than the bound.
-
-    Sizes come from a map-side-combined count; only the (few) hot bucket
-    keys broadcast back — no window over the hot key."""
-    if not bucket_cap:
-        return buckets
-    hot = track(
-        buckets.groupBy("bucket")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > bucket_cap)
-        .withColumn(
-            "thin_mod", F.ceil(F.col("n") / F.lit(bucket_cap)).cast("long")
-        )
-        .select("bucket", "thin_mod")
-    )
-    # adaptive short-circuit: when auto_n_planes holds and the corpus has
-    # no mass point, NO bucket is hot — the guard then costs one
-    # partial-aggregated count and skips the broadcast-join wrapper
-    # (measured ~2x on the 25k-vector bench corpus). `hot` is persisted,
-    # so the probe and the broadcast share one computation.
-    if hot.limit(1).count() == 0:
-        return buckets
-    joined = buckets.join(F.broadcast(hot), "bucket", "left")
-    res = F.pmod(F.xxhash64(F.col(id_col)), F.col("thin_mod"))
-    anchor = F.pmod(F.xxhash64(F.col("bucket")), F.col("thin_mod"))
-    return joined.filter(
-        F.col("thin_mod").isNull()
-        | (res == anchor)
-        | (res == F.pmod(anchor + 1, F.col("thin_mod")))
-    ).drop("thin_mod")
-
-
 def _train_ivf_centroids(
     embeddings: DataFrame, n_cells: int, sample_target: int, iters: int,
     n: int,
@@ -685,11 +630,11 @@ def _ivf_candidates(
     )
     # corpus postings: each vector lives in its single NEAREST cell;
     # ids-only, capped against mass points
-    corpus = thin_hot_buckets(
+    corpus = cap_hot_keys(
         assigned.select(
             "vec_id", F.element_at("probes", 1).alias("bucket")
         ),
-        cell_cap,
+        "bucket", cell_cap, "vec_id", anchor=F.xxhash64("bucket"),
     )
     # query probes: n_probe nearest cells per query — bounded fan-out
     probes = assigned.select(
@@ -723,7 +668,7 @@ def _lsh_candidate_pairs(
     bucket self-join carries IDS ONLY (embeddings, ~512B each, attach
     later via equi-joins, so the shuffle moves ~16 bytes per candidate
     instead of ~1KB); hot buckets are capped by
-    :func:`thin_hot_buckets`."""
+    :func:`jam_spark.pairs.cap_hot_keys`."""
     if bucket_cap is None:
         bucket_cap = 8 * target_bucket
     if n_planes is None:
@@ -763,7 +708,12 @@ def _lsh_candidate_pairs(
         )
         .repartition("bucket")
     )
-    b = thin_hot_buckets(b, bucket_cap)
+    # auto_n_planes bounds only the EXPECTED bucket: mass points
+    # (duplicate or zero embeddings, collapse modes) drop millions of
+    # vectors into one bucket per table at any plane count
+    b = cap_hot_keys(
+        b, "bucket", bucket_cap, "vec_id", anchor=F.xxhash64("bucket")
+    )
     return (
         b.alias("x")
         .join(b.alias("y"), "bucket")
@@ -795,8 +745,9 @@ def ann_lsh_topk(
     (1 - θ/π)^n_planes, so more tables buy back the recall that more
     planes cost; recall floors are enforced in tests at 1× and 10× the
     test corpus. ``bucket_cap`` (default 8×target_bucket) bounds the
-    WORST-case bucket via :func:`thin_hot_buckets` — expected-case math
-    never triggers it; adversarial mass points can't m² the self-join.
+    WORST-case bucket via :func:`jam_spark.pairs.cap_hot_keys` —
+    expected-case math never triggers it; adversarial mass points can't
+    m² the self-join.
     """
     cand = _lsh_candidate_pairs(
         embeddings, n_planes, n_tables, target_bucket, bucket_cap

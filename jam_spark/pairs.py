@@ -3,10 +3,11 @@
 Mirrors the reference's index path (``src/compare.rs:308-387``) at LSH
 granularity:
 
-1. candidates — equi-self-join of the bands table on (band_id, band_hash)
-   ≅ the LMDB postings probe (``src/compare.rs:344-352``); Catalyst picks
-   the physical join, AQE handles skew; hot bands are additionally thinned
-   by a deterministic cap (north_rule's salted-keys concern).
+1. candidates — equi-self-join of the postings on the packed band key
+   ``bkey`` ≅ the LMDB postings probe (``src/compare.rs:344-352``);
+   Catalyst picks the physical join, AQE handles skew; hot keys are
+   additionally thinned by a deterministic cap (:func:`cap_hot_keys`,
+   north_rule's salted-keys concern).
 2. verify — exact set intersection of the two real sketches
    (``src/compare.rs:170-203``) as the JVM built-in
    ``size(array_intersect(a, b))`` — sketch arrays are distinct by
@@ -21,98 +22,31 @@ granularity:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._persist import track
 from .bands import make_band_udf
 from .params import SketchParams
 
 
-def bands_table(sketches: DataFrame, params: SketchParams, id_col: str = "url") -> DataFrame:
-    """(id, band_id, band_hash) postings — the banded generalization of the
-    reference's LMDB ``hashes`` table (``src/file_io.rs:227-232``)."""
-    band_udf = make_band_udf(params)
-    return (
-        sketches.select(id_col, F.posexplode(band_udf("sketch")).alias("band_id", "band_hash"))
-    )
-
-
-def thin_hot_bands(bands: DataFrame, params: SketchParams, id_col: str = "url") -> DataFrame:
-    """Deterministically thin bands whose postings exceed ``band_cap``.
-
-    Scale-safe: sizes come from a partial-aggregated count (no window sort
-    over the hot key); only the (few) hot band keys are broadcast back.
-    A member survives band b iff ``xxhash64(id) % mod`` is one of the two
-    consecutive residues ``{b % mod, (b+1) % mod}``, with
-    ``mod = ceil(size/cap)`` — a per-band ROTATION of survivor subsets.
-    Each doc keeps ≈ 2·bands/mod of its bands (≥ 1 while mod ≤ bands)
-    instead of either keeping all or losing all, and because every band
-    bucket mixes two ADJACENT residue classes, verified pairs chain the
-    residue classes r→r+1→… into one connected component — a single
-    residue per band fragments the cluster into mod pieces. Buckets stay
-    ≈ 2·cap members, bounding an m-doc boilerplate cluster at
-    O(bands × cap²) candidate pairs — independent of m.
-
-    Limit (documented): a NEAR-dup cluster wider than bands × cap may
-    fragment (mod > bands leaves some docs with zero bands). True mirror
-    pages are exact dups and never reach this stage (pre-group); raise
-    band_cap if near-identical clusters beyond that size matter.
-    """
-    if not params.band_cap:
-        return bands
-    from ._persist import track
-
-    sizes = bands.groupBy("band_id", "band_hash").count()
-    hot = track(
-        sizes.filter(F.col("count") > params.band_cap).withColumn(
-            "thin_mod",
-            F.ceil(F.col("count") / F.lit(params.band_cap)).cast("long"),
-        )
-    )
-    # adaptive short-circuit (same spirit as AQE's runtime re-plan): at
-    # most corpus shapes NO band exceeds the cap — skip the broadcast
-    # join wrapper entirely then, so the worst-case guard costs one
-    # partial-aggregated count and nothing else. `hot` is persisted, so
-    # the probe and the broadcast share one computation.
-    if hot.limit(1).count() == 0:
-        return bands
-    joined = bands.join(
-        F.broadcast(hot.select("band_id", "band_hash", "thin_mod")),
-        ["band_id", "band_hash"],
-        "left",
-    )
-    res = F.pmod(F.xxhash64(F.col(id_col)), F.col("thin_mod"))
-    return joined.filter(
-        F.col("thin_mod").isNull()
-        | (res == F.pmod(F.col("band_id").cast("long"), F.col("thin_mod")))
-        | (res == F.pmod(F.col("band_id").cast("long") + 1, F.col("thin_mod")))
-    ).drop("thin_mod")
-
-
-#: join the candidate self-join on ONE packed 8-byte key instead of the
-#: (band_id int, band_hash long) pair — band_id (< 64 bands) in the top
-#: 6 bits, band_hash truncated to the low 58. UnsafeRow lays every field
-#: on 8 bytes, so two key columns + id = 32B/row through the exchange vs
-#: 24B packed (-25% shuffle bytes), plus single-long hashing/compare. A
-#: 58-bit truncation collision only ever ADDS a candidate, which the
-#: exact verify stage then rejects — correctness is untouched. Flag
-#: exists for A/B measurement.
-PACK_BAND_KEY = True
-
+#: packed band key: band_id (< 64 bands) in the top 6 bits, band_hash
+#: truncated to the low 58 — see :func:`packed_bands`
 _BKEY_MASK = (1 << 58) - 1
-
-
-def _bkey_col():
-    return F.shiftleft(F.col("band_id").cast("long"), 58).bitwiseOR(
-        F.col("band_hash").bitwiseAND(F.lit(_BKEY_MASK))
-    )
 
 
 def packed_bands(
     sketches: DataFrame, params: SketchParams, id_col: str = "url"
 ) -> DataFrame:
     """(bkey, id) postings hash-partitioned on the packed band key —
-    ONE exchange that every downstream consumer reuses.
+    the banded generalization of the reference's LMDB ``hashes`` table
+    (``src/file_io.rs:227-232``), built with ONE exchange that every
+    downstream consumer reuses.
+
+    The key is ONE 8-byte long instead of the (band_id int, band_hash
+    long) pair: UnsafeRow lays every field on 8 bytes, so (bkey, nid)
+    rows cross the exchange at 16B instead of 24B for (band_id,
+    band_hash, nid), with single-long hashing/compare.
 
     The flagship's pairs stage has three passes over the postings: the
     hot-size aggregate, the (optional) thinning join, and the candidate
@@ -124,9 +58,7 @@ def packed_bands(
     POST-shuffle table makes the cached ``hashpartitioning(bkey)``
     visible to Catalyst, so the aggregate and both self-join sides
     satisfy their required distribution from the cache — zero further
-    exchanges over the 57M-row table (plan-asserted in
-    ``test_packed_bands_single_exchange``). Rows are also narrower:
-    (bkey, nid) = 16B vs (band_id, band_hash, nid) = 24B.
+    exchanges over the 57M-row table.
 
     The 58-bit band_hash truncation inside ``bkey`` can merge two
     distinct bands' postings (n²/2^59 keys ≈ 6 collisions at 57M): in
@@ -134,47 +66,97 @@ def packed_bands(
     verify), and in the hot-size aggregate it can only OVERCOUNT a
     band — thinning slightly early, never missing a hot band.
     """
-    b = bands_table(sketches, params, id_col=id_col)
-    return b.select(_bkey_col().alias("bkey"), F.col(id_col)).repartition(
-        "bkey"
+    band_udf = make_band_udf(params)
+    bkey = F.shiftleft(F.col("band_id").cast("long"), 58).bitwiseOR(
+        F.col("band_hash").bitwiseAND(F.lit(_BKEY_MASK))
+    )
+    return (
+        sketches.select(
+            id_col, F.posexplode(band_udf("sketch")).alias("band_id", "band_hash")
+        )
+        .select(bkey.alias("bkey"), F.col(id_col))
+        .repartition("bkey")
+    )
+
+
+def cap_hot_keys(
+    df: DataFrame, key: str, cap: int | None, id_col: str, anchor: Column
+) -> DataFrame:
+    """Deterministically thin the postings of every ``key`` value held
+    by more than ``cap`` rows — the one skew guard behind the band,
+    simhash-band and ANN-bucket self-joins (north_rule's salted-keys
+    concern: an m-member key is an m² join).
+
+    A row of key value v survives iff ``xxhash64(id) % mod`` is one of
+    the two ADJACENT residues ``{a, (a+1) % mod}``, with
+    ``mod = ceil(size/cap)`` and ``a = anchor % mod`` — a per-key
+    ROTATION of survivor subsets. Every thinned key keeps ≈ 2·cap
+    members, so per-key join work is O(cap²) however large the key, and
+    an id keeps ≈ 2·keys/mod of its keys (≥ 1 while mod ≤ its number of
+    keys) instead of all or none. Two residues, not one: each surviving
+    key mixes two adjacent residue classes, so verified pairs chain the
+    classes r→r+1→… into one connected component — a single residue per
+    key would fragment a cluster into mod pieces.
+
+    Anchors: band postings anchor on the band id (0..bands-1, recovered
+    from the key — :func:`thin_hot_bkeys`), so one doc's bands cycle
+    through every residue pair. Keys whose ids differ only in their high
+    bits (ANN buckets are ``table << n_planes | signature``, simhash band
+    keys ``band_id << 16 | value``) anchor on ``xxhash64(key)`` instead:
+    raw-mod residues would collapse to ~2 distinct pairs across all of
+    an id's keys, while the hashed anchor decorrelates them. Coverage is
+    then probabilistic: a member of a hot key in every one of its t
+    keys survives ≥ 1 with p = 1-(1-2/mod)^t (≈99.5% at mod=10, 24 ANN
+    tables) — the price of bounding an adversarial m² join; raise the
+    cap if total coverage matters more than the bound.
+
+    Limit: a NEAR-dup cluster wider than keys-per-id × cap may fragment
+    (mod > keys leaves some ids with no key). True mirror pages are
+    exact dups and never reach the band stage (pre-group); raise
+    ``band_cap`` if near-identical clusters beyond that size matter.
+
+    Scale-safe: sizes come from a partial-aggregated count (no window
+    sort over the hot key); only the (few) hot keys are broadcast back,
+    and both the aggregate and the broadcast join preserve the input's
+    ``key`` partitioning.
+    """
+    if not cap:
+        return df
+    hot = track(
+        df.groupBy(key)
+        .count()
+        .filter(F.col("count") > cap)
+        .withColumn("thin_mod", F.ceil(F.col("count") / F.lit(cap)).cast("long"))
+        .select(key, "thin_mod")
+    )
+    # adaptive short-circuit (same spirit as AQE's runtime re-plan): at
+    # most corpus shapes NO key exceeds the cap — return the input then,
+    # so the guard costs one partial-aggregated count and adds no join
+    # (measured ~2x on ann_lsh_topk). `hot` is persisted, so the probe
+    # and the broadcast share one computation; on persisted postings
+    # the probe is also what materializes their cache.
+    if hot.limit(1).count() == 0:
+        return df
+    mod = F.col("thin_mod")
+    res = F.pmod(F.xxhash64(F.col(id_col)), mod)
+    a = F.pmod(anchor, mod)
+    return (
+        df.join(F.broadcast(hot), key, "left")
+        .filter(mod.isNull() | (res == a) | (res == F.pmod(a + 1, mod)))
+        .drop("thin_mod")
     )
 
 
 def thin_hot_bkeys(
     bands: DataFrame, params: SketchParams, id_col: str = "url"
 ) -> DataFrame:
-    """:func:`thin_hot_bands` for the packed-key postings of
-    :func:`packed_bands` — identical rotation-residue scheme, with
-    band_id recovered from bkey's high 6 bits. Both the sizes aggregate
-    and the broadcast thinning join preserve the input's bkey
-    partitioning, so the downstream self-join stays exchange-free."""
-    if not params.band_cap:
-        return bands
-    from ._persist import track
-
-    sizes = bands.groupBy("bkey").count()
-    hot = track(
-        sizes.filter(F.col("count") > params.band_cap)
-        .withColumn(
-            "thin_mod",
-            F.ceil(F.col("count") / F.lit(params.band_cap)).cast("long"),
-        )
-        .select("bkey", "thin_mod")
+    """:func:`cap_hot_keys` at ``params.band_cap`` over the
+    :func:`packed_bands` postings, anchored on the band id (bkey's high
+    6 bits)."""
+    return cap_hot_keys(
+        bands, "bkey", params.band_cap, id_col,
+        anchor=F.shiftrightunsigned(F.col("bkey"), 58),
     )
-    # same adaptive short-circuit as thin_hot_bands: no hot band ⇒ the
-    # guard costs one exchange-free aggregate and skips the join wrapper.
-    # This probe is also what materializes the (lazily persisted) packed
-    # postings cache for the candidate join.
-    if hot.limit(1).count() == 0:
-        return bands
-    joined = bands.join(F.broadcast(hot), "bkey", "left")
-    band_id = F.shiftrightunsigned(F.col("bkey"), 58)
-    res = F.pmod(F.xxhash64(F.col(id_col)), F.col("thin_mod"))
-    return joined.filter(
-        F.col("thin_mod").isNull()
-        | (res == F.pmod(band_id, F.col("thin_mod")))
-        | (res == F.pmod(band_id + 1, F.col("thin_mod")))
-    ).drop("thin_mod")
 
 
 def candidate_pairs(bands: DataFrame, id_col: str = "url") -> DataFrame:
@@ -187,30 +169,15 @@ def candidate_pairs(bands: DataFrame, id_col: str = "url") -> DataFrame:
     both sides) beats a groupBy-collect_set + in-array pair expansion
     (35-94s) — the array route pays a per-element ``slice`` copy, i.e.
     O(m²) memory traffic per bucket, plus the collect agg. Keep the join.
-    The join key is the packed 8-byte ``bkey`` (see PACK_BAND_KEY); a
-    :func:`packed_bands` input (already keyed AND hash-partitioned on
-    bkey) joins straight off its cached partitioning with no exchange.
+    The join key is the packed 8-byte ``bkey``; a :func:`packed_bands`
+    input (already keyed AND hash-partitioned on bkey) joins straight
+    off its cached partitioning with no exchange.
     """
-    if "bkey" in bands.columns:
-        keyed = bands.select("bkey", F.col(id_col))
-        a = keyed.select("bkey", F.col(id_col).alias("id_a"))
-        b = keyed.select("bkey", F.col(id_col).alias("id_b"))
-        join_key = ["bkey"]
-    elif PACK_BAND_KEY:
-        keyed = bands.select(_bkey_col().alias("bkey"), F.col(id_col))
-        a = keyed.select("bkey", F.col(id_col).alias("id_a"))
-        b = keyed.select("bkey", F.col(id_col).alias("id_b"))
-        join_key = ["bkey"]
-    else:
-        a = bands.select(
-            F.col("band_id"), F.col("band_hash"), F.col(id_col).alias("id_a")
-        )
-        b = bands.select(
-            F.col("band_id"), F.col("band_hash"), F.col(id_col).alias("id_b")
-        )
-        join_key = ["band_id", "band_hash"]
+    keyed = bands.select("bkey", F.col(id_col))
+    a = keyed.select("bkey", F.col(id_col).alias("id_a"))
+    b = keyed.select("bkey", F.col(id_col).alias("id_b"))
     return (
-        a.join(b, join_key)
+        a.join(b, ["bkey"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()

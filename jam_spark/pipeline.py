@@ -148,8 +148,8 @@ def pairs_stage(
     distribution straight from the cache — one exchange over the
     |docs|×bands table instead of three (measured: pairs-stage medians
     50.7s → 36.4s at 1M docs / 16 cores, 1.39×, new plan faster in
-    every interleaved rep; tools/profile_pairs.py). The persist is
-    lazy; the hot probe's first pass populates it.
+    every interleaved rep; recorded in BENCH/BASELINE.md). The persist
+    is lazy; the hot probe's first pass populates it.
     """
     sk = with_nid(sketches)
     bands = track(packed_bands(sk, params, id_col="nid"))

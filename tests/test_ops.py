@@ -169,7 +169,8 @@ def test_ann_hot_bucket_cap_bounds_mass_points(spark):
     their k (cosine=1.0) neighbors through ≥1 surviving table."""
     import pandas as pd
 
-    from jam_spark.ops.similarity import ann_lsh_topk, thin_hot_buckets
+    from jam_spark.ops.similarity import ann_lsh_topk
+    from jam_spark.pairs import cap_hot_keys
 
     # direct bound: a 2000-member bucket thinned at cap=64 keeps the two
     # surviving residue classes ≈ 2·cap members, not 2000
@@ -177,7 +178,9 @@ def test_ann_hot_bucket_cap_bounds_mass_points(spark):
     postings = spark.createDataFrame(
         pd.DataFrame({"vec_id": np.arange(n), "bucket": np.full(n, 7)})
     )
-    kept = thin_hot_buckets(postings, 64).count()
+    kept = cap_hot_keys(
+        postings, "bucket", 64, "vec_id", anchor=F.xxhash64("bucket")
+    ).count()
     assert kept <= 4 * 64, kept
     assert kept >= 32  # ...but not thinned to nothing
 
@@ -368,34 +371,6 @@ def test_simhash_dup_pairs_exact_vs_brute_force(spark):
     }
     assert got == want
     assert (1, 2, 0) in got  # the planted mirror pair survived
-
-
-def test_hot_thinners_short_circuit_when_nothing_is_hot(spark):
-    """When no key exceeds the cap (the common corpus shape), both
-    thinners must return the INPUT DataFrame unchanged — the skew guard
-    then costs one partial-aggregated count and adds NO join to the
-    downstream plan (measured ~2x on ann_lsh_topk before this)."""
-    import pandas as pd
-
-    from jam_spark.ops.similarity import thin_hot_buckets
-    from jam_spark.pairs import thin_hot_bands
-    from jam_spark.params import SketchParams
-
-    postings = spark.createDataFrame(
-        pd.DataFrame({"vec_id": np.arange(100), "bucket": np.arange(100) % 10})
-    )
-    assert thin_hot_buckets(postings, 64) is postings
-
-    bands = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "url": [f"u{i}" for i in range(100)],
-                "band_id": np.arange(100) % 5,
-                "band_hash": np.arange(100) % 7,
-            }
-        )
-    )
-    assert thin_hot_bands(bands, SketchParams()) is bands
 
 
 def test_cosine_dup_pairs_finds_planted_near_dups(spark):
@@ -2037,12 +2012,12 @@ def test_winnow_hash_pass_runs_above_the_exchange(spark):
     the operator serialized on one task despite the guard. The empty-
     grams guard now lives inside the projection, so everything below
     the Exchange must be hash-free."""
-    from jam_spark.ops.dedup import _ensure_parallelism
     from jam_spark.ops.text import winnow_doc_fps
+    from jam_spark.scan import ensure_scan_parallelism
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     plan = (
-        winnow_doc_fps(_ensure_parallelism(docs))
+        winnow_doc_fps(ensure_scan_parallelism(docs))
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" in plan  # the guard did repartition the tiny file

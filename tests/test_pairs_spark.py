@@ -77,27 +77,42 @@ def test_pair_recall_vs_oracle(spark, corpus_pages, pages_df, oracle_state):
     assert not extras, list(extras)[:10]
 
 
-def test_hot_band_thinning_caps_postings(spark, pages_df):
-    from jam_spark.pairs import bands_table, thin_hot_bands
+@pytest.mark.parametrize("key", ["bkey", "bucket"])
+def test_cap_hot_keys_bounds_keys_and_keeps_every_id(spark, key):
+    """One cap, both anchor forms: band-id anchor on packed ``bkey``
+    postings, hashed anchor on ANN-style ``bucket`` postings. Every id
+    posts to the same 24 mass-point keys, so all of them are hot.
+    (a) nothing hot ⇒ the INPUT object comes back (no join added);
+    (b) the largest surviving key holds at most 3× cap;
+    (c) with mod ≤ keys per id, no id loses all of its keys."""
+    import pandas as pd
 
-    params = SketchParams(band_cap=8)
-    sketches, _ = sketch_stage(pages_df, params)
-    bands = bands_table(sketches, params).persist()
-    thinned = thin_hot_bands(bands, params).persist()
-    sizes = (
-        thinned.groupBy("band_id", "band_hash")
-        .count()
-        .agg(F.max("count"))
-        .collect()[0][0]
-    )
-    # thinning keeps ~cap members (probabilistic mod filter: allow 3x slack)
-    assert sizes <= 3 * params.band_cap
-    assert thinned.count() < bands.count()  # the hot template got thinned
-    # per-band rotation: every doc that had bands must KEEP at least one
-    # (losing all bands would exile it from its cluster)
-    before = {r["url"] for r in bands.select("url").distinct().collect()}
-    after = {r["url"] for r in thinned.select("url").distinct().collect()}
-    assert before == after
+    from jam_spark.pairs import cap_hot_keys
+
+    n_ids, n_keys, cap = 200, 24, 64  # mod = ceil(200/64) = 4 <= 24
+    ids = np.repeat(np.arange(n_ids, dtype=np.int64), n_keys)
+    slot = np.tile(np.arange(n_keys, dtype=np.int64), n_ids)
+    if key == "bkey":
+        keys = (slot << 58) | 12345  # band_id ‖ shared band_hash
+        anchor = F.shiftrightunsigned(F.col("bkey"), 58)
+    else:
+        keys = (slot << 16) | 7  # table ‖ shared signature
+        anchor = F.xxhash64("bucket")
+    postings = spark.createDataFrame(
+        pd.DataFrame({"id": ids, key: keys})
+    ).persist()
+
+    assert cap_hot_keys(postings, key, n_ids, "id", anchor) is postings
+    assert cap_hot_keys(postings, key, None, "id", anchor) is postings
+
+    thinned = cap_hot_keys(postings, key, cap, "id", anchor).persist()
+    largest = thinned.groupBy(key).count().agg(F.max("count")).collect()[0][0]
+    assert largest <= 3 * cap, largest
+    assert thinned.count() < postings.count()
+    kept_ids = {r["id"] for r in thinned.select("id").distinct().collect()}
+    assert kept_ids == set(range(n_ids))
+    thinned.unpersist()
+    postings.unpersist()
 
 
 def test_hot_cluster_survives_aggressive_thinning(spark, corpus_pages, pages_df):
@@ -154,21 +169,54 @@ def test_pairs_stage_plan_has_no_rowwise_python(spark, pages_df):
     assert "BatchEvalPython" not in plan
 
 
+def _reference_candidates(nids, sketches, params):
+    """Pure-Python candidate pairs: group ids by the packed band key
+    (band_id << 58 | band_hash & (2^58-1)) from ``band_arrays``, thin
+    keys above ``band_cap`` to the two rotation residues
+    {b % mod, (b+1) % mod} of xxhash64(nid) % mod, then pair up every
+    key's survivors (nid_a < nid_b)."""
+    import math
+    import struct
+    from collections import defaultdict
+
+    from jam_spark.hashes import xxh64
+
+    postings = defaultdict(list)
+    for nid, bands in zip(nids, band_arrays(sketches, params)):
+        for b, h in enumerate(bands.tolist()):
+            postings[(b << 58) | (h & ((1 << 58) - 1))].append(nid)
+
+    def residue(nid, mod):  # Spark's pmod(xxhash64(long), mod)
+        x = xxh64(struct.pack("<q", nid), 42)
+        return (x - (1 << 64) if x >= 1 << 63 else x) % mod
+
+    pairs = set()
+    for k, members in postings.items():
+        if params.band_cap and len(members) > params.band_cap:
+            mod = math.ceil(len(members) / params.band_cap)
+            b = k >> 58
+            members = [
+                m for m in members
+                if residue(m, mod) in (b % mod, (b + 1) % mod)
+            ]
+        for i, x in enumerate(members):
+            for y in members[i + 1:]:
+                pairs.add((min(x, y), max(x, y)))
+    return pairs, max(len(v) for v in postings.values())
+
+
 @pytest.mark.parametrize("band_cap", [256, 8])
-def test_packed_bands_candidates_match_unpacked(spark, pages_df, band_cap):
+def test_packed_bands_candidates_match_python_reference(
+    spark, pages_df, band_cap
+):
     """The single-exchange packed-postings plan (packed_bands +
-    thin_hot_bkeys + bkey self-join) must produce the IDENTICAL
-    candidate set as the unpacked (band_id, band_hash) plan at both a
-    no-hot cap (256) and an aggressively-hot cap (8) — the rotation
-    residues are the same function of (band_id, xxhash64(id), mod), so
-    packing changes plan shape, never membership (modulo 58-bit key
-    collisions, absent at test scale)."""
+    thin_hot_bkeys + bkey self-join) must produce exactly the candidate
+    set of a pure-Python banding over ``band_arrays`` keyed the same
+    way, at a no-hot cap (256) and an aggressively-hot cap (8)."""
     from jam_spark._persist import release_all, track
     from jam_spark.pairs import (
-        bands_table,
         candidate_pairs,
         packed_bands,
-        thin_hot_bands,
         thin_hot_bkeys,
         with_nid,
     )
@@ -176,23 +224,20 @@ def test_packed_bands_candidates_match_unpacked(spark, pages_df, band_cap):
     params = SketchParams(band_cap=band_cap)
     sketches, _ = sketch_stage(pages_df, params)
     sk = with_nid(track(sketches, eager=True))
-
-    new_bands = thin_hot_bkeys(
+    bands = thin_hot_bkeys(
         track(packed_bands(sk, params, id_col="nid")), params, id_col="nid"
     )
-    new = {
-        tuple(r)
-        for r in candidate_pairs(new_bands, id_col="nid").collect()
+    got = {
+        tuple(r) for r in candidate_pairs(bands, id_col="nid").collect()
     }
-    old_bands = thin_hot_bands(
-        track(bands_table(sk, params, id_col="nid"), eager=True),
+    rows = sk.select("nid", "sketch").collect()
+    want, largest = _reference_candidates(
+        [r["nid"] for r in rows],
+        [np.asarray(r["sketch"] or [], dtype=np.int64).view(np.uint64)
+         for r in rows],
         params,
-        id_col="nid",
     )
-    old = {
-        tuple(r)
-        for r in candidate_pairs(old_bands, id_col="nid").collect()
-    }
     release_all()
-    assert new == old
-    assert len(new) > 0
+    assert got == want
+    assert len(got) > 0
+    assert (largest > band_cap) == (band_cap == 8)  # the cap-8 case thins

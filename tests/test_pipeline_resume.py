@@ -325,39 +325,6 @@ def test_incremental_rep_smaller_url_appended_later(spark, tmp_path):
     assert got == want
 
 
-def test_legacy_pairs_table_without_batch_column(spark, tmp_path):
-    """Round-4 advice (low): a checkpoint root produced before batch
-    stamping has a pairs table with no ``batch`` column; the first
-    incremental append must migrate it (backfill batch=0) instead of
-    raising AnalysisException at the epoch probe."""
-    import shutil
-
-    params = SketchParams()
-    pages_all = spark.createDataFrame(
-        pages_to_pandas(generate_pages(n_docs=200, seed=11))
-    ).cache()
-    first = pages_all.limit(150)
-    root = str(tmp_path / "ck12")
-    CheckpointedDedup(spark, root, params).run(first)
-
-    # simulate the legacy layout: strip the batch column in place
-    pairs_path = os.path.join(root, "pairs")
-    legacy = spark.read.parquet(pairs_path).drop("batch")
-    tmp = pairs_path + ".__legacy__"
-    legacy.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(pairs_path)
-    os.replace(tmp, pairs_path)
-    assert "batch" not in spark.read.parquet(pairs_path).columns
-
-    got = _clusters_dict(CheckpointedDedup(spark, root, params).run(pages_all))
-    want = _clusters_dict(dedup_pipeline(pages_all, params))
-    assert got == want
-    migrated = spark.read.parquet(pairs_path)
-    assert "batch" in migrated.columns
-    batches = {r["batch"] for r in migrated.select("batch").distinct().collect()}
-    assert batches <= {0, 1} and 0 in batches
-
-
 def test_null_text_pages_kept_and_not_resketched(spark, tmp_path):
     """Round-4 advice (low): NULL never equals NULL in a join — null-text
     pages (permitted by the streaming schema) must still appear in
@@ -496,61 +463,37 @@ def test_crash_during_full_bands_rebuild_with_stale_watermark(spark, tmp_path):
     assert not _os.path.exists(_os.path.join(root, "bands.append_intent"))
 
 
-def test_pre_r6_unpacked_bands_table_migrates_and_dedups(spark, tmp_path):
-    """Upgrade path: a checkpoint whose bands table is still in the
-    pre-r6 (nid, band_id, band_hash) shape — possibly with DUPLICATE
-    postings from a pre-intent-marker crashed append (the r5 ADVICE
-    upgrade window: no marker file, so the gate alone would skip the
-    idempotency anti-join) — must be migrated once to the packed
-    (bkey, nid) shape, row-deduplicated, and converge to the
-    from-scratch clusters on the next incremental run."""
-    import os as _os
+@pytest.mark.parametrize("stage", ["bands", "pairs"])
+def test_old_layout_root_refused(spark, tmp_path, stage):
+    """A root whose bands table is still unpacked (nid, band_id,
+    band_hash) or whose pairs table predates the ``batch`` epoch is not
+    migrated: resuming on it is refused with a ValueError that names the
+    root and says to rebuild it."""
+    import re
+    import shutil
 
     from pyspark.sql import functions as F
-
-    from jam_spark.pairs import _BKEY_MASK, bands_table, thin_hot_bands, with_nid
-    from jam_spark.pipeline import dedup_pipeline
 
     params = SketchParams()
     pages_all = spark.createDataFrame(
         pages_to_pandas(generate_pages(n_docs=120, seed=13))
     ).cache()
-    first = pages_all.limit(80)
-    root = str(tmp_path / "ck_migrate")
-    CheckpointedDedup(spark, root, params).run(first)
+    root = str(tmp_path / f"ck_old_{stage}")
+    CheckpointedDedup(spark, root, params).run(pages_all.limit(80))
 
-    # rewrite the bands table into the legacy unpacked shape, with every
-    # posting DUPLICATED (what a pre-marker crashed append could leave,
-    # un-flagged: no .append_intent file exists)
-    sk = with_nid(spark.read.parquet(_os.path.join(root, "sketches")))
-    legacy = thin_hot_bands(
-        bands_table(sk, params, id_col="nid"), params, id_col="nid"
-    ).select("nid", "band_id", "band_hash")
-    legacy = legacy.unionByName(legacy)  # planted duplicates
-    tmp = _os.path.join(root, "bands.__legacy__")
-    legacy.write.mode("overwrite").parquet(tmp)
-    import shutil as _shutil
+    path = os.path.join(root, stage)
+    table = spark.read.parquet(path)
+    if stage == "bands":
+        old = table.select(
+            "nid",
+            F.shiftrightunsigned("bkey", 58).cast("int").alias("band_id"),
+            F.col("bkey").bitwiseAND(F.lit((1 << 58) - 1)).alias("band_hash"),
+        )
+    else:
+        old = table.drop("batch")
+    old.write.mode("overwrite").parquet(path + ".__old__")
+    shutil.rmtree(path)
+    os.replace(path + ".__old__", path)
 
-    _shutil.rmtree(_os.path.join(root, "bands"))
-    _os.replace(tmp, _os.path.join(root, "bands"))
-    assert not _os.path.exists(_os.path.join(root, "bands.append_intent"))
-
-    got = _clusters_dict(CheckpointedDedup(spark, root, params).run(pages_all))
-    want = _clusters_dict(dedup_pipeline(pages_all, params))
-    assert got == want
-
-    bands = spark.read.parquet(_os.path.join(root, "bands"))
-    assert "bkey" in bands.columns and "band_id" not in bands.columns
-    assert (
-        bands.count() == bands.select("nid", "bkey").distinct().count()
-    ), "migration left duplicate postings"
-    # the migrated legacy postings (packed + deduplicated) must all be
-    # present in the final table (the incremental run only appends the
-    # new pages' postings on top)
-    expect = legacy.select(
-        F.shiftleft(F.col("band_id").cast("long"), 58)
-        .bitwiseOR(F.col("band_hash").bitwiseAND(F.lit(_BKEY_MASK)))
-        .alias("bkey"),
-        "nid",
-    ).distinct()
-    assert expect.exceptAll(bands.select("bkey", "nid")).count() == 0
+    with pytest.raises(ValueError, match=re.escape(root) + ".*rebuild"):
+        CheckpointedDedup(spark, root, params).run(pages_all)

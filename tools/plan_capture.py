@@ -23,8 +23,6 @@ SUFFIX = os.environ.get("JAM_PLAN_SUFFIX", "before")
 
 def main() -> None:
     from jam_spark.ops import dedup, similarity, text
-    from jam_spark.params import SketchParams
-    from jam_spark.pipeline import dedup_pipeline
     from jam_spark.session import get_spark
 
     tag = sys.argv[1]
