@@ -13,7 +13,9 @@ Parquet layout:
 
     root/
       params.json            frozen SketchParams for the whole run
-      sketches/   membership/   pairs/   clusters/     (stage tables)
+      progress.json          the one progress record (epochs, open windows)
+      sketches/  membership/  bands/  pairs/  clusters/   (stage tables)
+      clusters_base/         the previous labels, base of incremental CC
       metrics/<stage>.jsonl  per-stage row counts, per-partition rows,
                              wall_ms, completion marker
 
@@ -23,28 +25,42 @@ Resume contract:
 - a params mismatch is an ERROR, mirroring the reference's refusal to
   compare sketches with unequal k/fscale
   (``/root/reference/src/compare.rs:106-112,267-288``);
-- a stage table in an older layout (bands without the packed ``bkey``,
-  pairs without the ``batch`` epoch) is an ERROR too: such a root is
-  rebuilt, not migrated;
+- a stage table in an older layout (sketches or pairs without the
+  ``batch`` epoch, bands without the packed ``bkey``) is an ERROR too:
+  such a root is rebuilt, not migrated;
+- every ingest is one EPOCH: 0 for the full build, e for the e-th
+  append. Sketch rows carry their epoch in ``batch``; ``progress.json``
+  records, per stage, the last sketch epoch that stage absorbed, the
+  epoch the ``clusters_base`` snapshot covers, and the stages with an
+  OPEN append window. It is replaced atomically (temp file +
+  ``os.replace``), so a crash leaves the old record or the new one;
 - appended input is processed INCREMENTALLY end-to-end (the 100 TB
   concern: a daily ingest must cost O(delta), not O(corpus)):
   * sketches: new pages (left_anti on known urls) are sketched and
-    appended; cross-batch exact dups collapse via the text fingerprint;
-  * bands: only postings for new rep nids are computed and appended
-    (``band_nids`` watermark + a content anti-join for crash
-    idempotency — the existing postings table is REUSED, never rebuilt);
+    appended under the next epoch; cross-batch exact dups collapse via
+    the text fingerprint;
+  * bands: only sketch rows of epochs past the bands epoch are banded
+    and appended — the existing postings table is REUSED, never rebuilt;
   * pairs: the candidate join runs new-bands x all-bands only (the
     delta supersets nothing: old x old candidates are already verified);
-    appended rows are stamped with a ``batch`` epoch;
+    appended rows are stamped in ``batch`` with the sketch epoch they
+    cover;
   * clusters: connected components re-closes over the PREVIOUS labels
-    (star edges from the snapshot ``clusters_base``) plus the delta
-    pair edges — O(delta + clusters), not O(all pairs). Labels equal a
-    from-scratch run because (a) replacing a component's internal edges
-    by a star to its label preserves connectivity, and (b) the final
-    label is canonicalized to the min MEMBER url per component in
-    ``run_clusters`` — necessary because the incremental sketch path
-    keeps the OLD rep for a known text_fp, so an appended url smaller
-    than its rep is a member but never a rep/CC node.
+    (star edges from the snapshot ``clusters_base``) plus the pair rows
+    of epochs past the snapshot's — O(delta + clusters), not O(all
+    pairs). Labels equal a from-scratch run because (a) replacing a
+    component's internal edges by a star to its label preserves
+    connectivity, and (b) the final label is canonicalized to the min
+    MEMBER url per component in ``run_clusters`` — necessary because
+    the incremental sketch path keeps the OLD rep for a known text_fp,
+    so an appended url smaller than its rep is a member but never a
+    rep/CC node;
+- an append survives a crash at any point: each stage opens its window
+  before it writes and closes it, recording the epoch it absorbed, in
+  one replace after. A retry that finds the window open (or the table
+  present without an epoch) re-derives the same delta and anti-joins it
+  against the table's content keys, so rows the crashed attempt wrote
+  are not written twice; the clean path skips that O(corpus) read.
   Incremental thinning caveat: ``band_cap`` is applied to each batch's
   postings against its own counts, so a band that becomes hot only
   ACROSS batches is capped later than a from-scratch run would — recall
@@ -62,16 +78,11 @@ from pyspark.sql import functions as F
 
 from .cluster import connected_components
 from .params import SketchParams
-from .pipeline import pairs_stage, sketch_stage
+from .pipeline import sketch_stage
 
-STAGES = ("sketches", "membership", "bands", "pairs", "clusters")
-#: stage → a column its table has carried since r6 (packed band key;
-#: pairs epoch stamp). A table without it was written by older code.
-_CURRENT_LAYOUT = {"bands": "bkey", "pairs": "batch"}
-#: side tables: per-stage nid watermarks (which reps a stage has
-#: processed — the append-idempotent alternative to invalidation) and
-#: the previous clusters snapshot feeding incremental CC
-SIDE_TABLES = ("band_nids", "pair_nids", "clusters_base")
+#: stage → a column its current table carries (the epoch stamp; the
+#: packed band key). A table without it was written by older code.
+_CURRENT_LAYOUT = {"sketches": "batch", "bands": "bkey", "pairs": "batch"}
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
@@ -125,7 +136,7 @@ class _ParquetStore:
     def done(self, stage: str) -> bool:
         return os.path.exists(os.path.join(self.path(stage), "_SUCCESS"))
 
-    def write(self, df: DataFrame, stage: str, props: dict) -> DataFrame:
+    def write(self, df: DataFrame, stage: str) -> DataFrame:
         df.write.mode("overwrite").parquet(self.path(stage))
         return self.read(stage)
 
@@ -148,10 +159,13 @@ class _IcebergStore:
     /root/reference/src/file_io.rs:222-226). Activated only when
     :func:`iceberg_catalog` finds a configured catalog."""
 
-    def __init__(self, spark: SparkSession, catalog: str, db: str):
+    def __init__(
+        self, spark: SparkSession, catalog: str, db: str, params: SketchParams
+    ):
         self.spark = spark
         self.catalog = catalog
         self.db = db
+        self.params_json = params.to_json()
         spark.sql(f"CREATE NAMESPACE IF NOT EXISTS {catalog}.{db}")
 
     def tbl(self, stage: str) -> str:
@@ -160,11 +174,13 @@ class _IcebergStore:
     def done(self, stage: str) -> bool:
         return self.spark.catalog.tableExists(self.tbl(stage))
 
-    def write(self, df: DataFrame, stage: str, props: dict) -> DataFrame:
-        w = df.writeTo(self.tbl(stage)).using("iceberg")
-        for k, v in props.items():
-            w = w.tableProperty(k, v)
-        w.createOrReplace()
+    def write(self, df: DataFrame, stage: str) -> DataFrame:
+        (
+            df.writeTo(self.tbl(stage))
+            .using("iceberg")
+            .tableProperty("jam.params", self.params_json)
+            .createOrReplace()
+        )
         return self.read(stage)
 
     def append(self, df: DataFrame, stage: str) -> None:
@@ -201,7 +217,7 @@ class CheckpointedDedup:
                 stacklevel=2,
             )
         self.store = (
-            _IcebergStore(spark, cat, iceberg_db)
+            _IcebergStore(spark, cat, iceberg_db, params)
             if cat
             else _ParquetStore(spark, root)
         )
@@ -225,30 +241,32 @@ class CheckpointedDedup:
     def _done(self, stage: str) -> bool:
         return self.store.done(stage)
 
-    def _begin_append(self, stage: str) -> bool:
-        """Open an append window on ``stage`` and report whether a
-        PREVIOUS window is still open (a prior attempt crashed between
-        its physical append and its watermark write). Callers run their
-        content anti-join against the existing table ONLY in that case —
-        on the clean path (every append but the retry-after-crash one)
-        the O(corpus)-read idempotency scan is skipped entirely.
-        Marker lifecycle: written before the append, removed after the
-        watermark write commits; a crash anywhere between leaves it in
-        place, so the next attempt de-duplicates. Removing it late can
-        only cause one extra (harmless) anti-join, never a duplicate.
-        At real scale the marker would live as a transaction property on
-        the Iceberg watermark table; here it is a root-local file, valid
-        for both stores because the root always exists."""
-        path = os.path.join(self.root, f"{stage}.append_intent")
-        dirty = os.path.exists(path)
-        with open(path, "w") as f:
-            f.write(json.dumps({"ts": time.time()}))
-        return dirty
+    def _progress(self) -> dict:
+        """The progress record: ``{stage: last epoch absorbed, ...,
+        "open": [stages with an open append window]}``. A root-local
+        file, valid for both stores because the root always exists (at
+        real scale it would be a transaction property of the tables)."""
+        try:
+            with open(os.path.join(self.root, "progress.json")) as f:
+                return json.load(f)
+        except FileNotFoundError:
+            return {"open": []}
 
-    def _end_append(self, stage: str) -> None:
-        path = os.path.join(self.root, f"{stage}.append_intent")
-        if os.path.exists(path):
-            os.remove(path)
+    def _save(self, stage: str, epoch: int | None = None) -> None:
+        """Atomically open ``stage``'s append window (``epoch`` None), or
+        close it and record ``epoch`` as the last one it absorbed — one
+        replace, so a crash never separates the two."""
+        progress = self._progress()
+        opened = set(progress["open"]) - {stage}
+        if epoch is None:
+            opened.add(stage)
+        else:
+            progress[stage] = epoch
+        progress["open"] = sorted(opened)
+        path = os.path.join(self.root, "progress.json")
+        with open(path + ".tmp", "w") as f:
+            json.dump(progress, f)
+        os.replace(path + ".tmp", path)
 
     def _log(self, stage: str, payload: dict) -> None:
         with open(os.path.join(self.root, "metrics", f"{stage}.jsonl"), "a") as f:
@@ -259,9 +277,7 @@ class CheckpointedDedup:
 
     def _write(self, df: DataFrame, stage: str) -> DataFrame:
         t0 = time.time()
-        out = self.store.write(
-            df, stage, {"jam.params": self.params.to_json()}
-        )
+        out = self.store.write(df, stage)
         per_part = [
             {"partition_id": r["pid"], "rows": r["count"]}
             for r in out.groupBy(F.spark_partition_id().alias("pid"))
@@ -302,9 +318,9 @@ class CheckpointedDedup:
         df = self.store.read(stage)
         col = _CURRENT_LAYOUT.get(stage)
         if col and col not in df.columns:
-            # pre-r6 layouts (unpacked (band_id, band_hash) postings, or
-            # pairs without the batch epoch) are not migrated: resuming
-            # on them would silently mix key formats or epochs
+            # older layouts (sketches or pairs without the batch epoch,
+            # unpacked (band_id, band_hash) postings) are not migrated:
+            # resuming on them would silently mix epochs or key formats
             raise ValueError(
                 f"checkpoint at {self.root} has a {stage} table without "
                 f"the {col!r} column (an older layout that is no longer "
@@ -322,30 +338,78 @@ class CheckpointedDedup:
             if os.path.exists(mfile):
                 os.remove(mfile)
 
+    def _pending(self, sk: DataFrame, stage: str) -> DataFrame | None:
+        """Sketch rows of committed epochs that ``stage`` has not absorbed
+        yet — all of them when its table is missing or has no recorded
+        epoch — or None when the stage is current (no Spark job)."""
+        progress = self._progress()
+        last = progress["sketches"]
+        lo = progress.get(stage) if self._done(stage) else None
+        if lo is not None and lo >= last:
+            return None
+        # rows of an epoch whose sketches window is still open are left
+        # for the run that commits it
+        rows = sk.filter(F.col("batch") <= last)
+        return rows if lo is None else rows.filter(F.col("batch") > lo)
+
+    def _commit(
+        self, stage: str, delta: DataFrame, key_cols: list[str], t0: float
+    ) -> DataFrame:
+        """The append protocol of bands and pairs: open the stage's
+        window, write ``delta`` (the whole table on a fresh stage, an
+        append otherwise), then close the window recording the sketch
+        epoch the stage now covers. When a previous attempt may have
+        written part of this delta — its window was left open, or the
+        table exists without an epoch — the append is anti-joined
+        against the table on ``key_cols`` first: the FULL content key,
+        not the nid alone, because a driver that died mid job-commit can
+        leave only SOME of a nid's rows behind. The clean path skips
+        that read of the whole table (measured: ~30% of the bands-append
+        wall at 1M docs / 10% delta, tools/incremental_bench.py)."""
+        progress = self._progress()
+        self._save(stage)
+        if not self._done(stage):
+            out = self._write(delta, stage)
+        else:
+            # read before appending: an older layout is refused untouched
+            table = self._read(stage)
+            if stage in progress["open"] or stage not in progress:
+                delta = delta.join(
+                    table.select(*key_cols), key_cols, "left_anti"
+                )
+            self._append(delta, stage, t0)
+            out = self._read(stage)
+        self._save(stage, progress["sketches"])
+        return out
+
     # ----------------------------------------------------------- stages
     def run_sketches(self, pages: DataFrame) -> tuple[DataFrame, DataFrame]:
         if self._done("sketches") and self._done("membership"):
             existing = self._read("sketches")
             membership = self._read("membership")
+            progress = self._progress()
+            # a retry after a crash reuses the epoch it was appending
+            epoch = progress.get("sketches", -1) + 1
             # incremental resume: sketch only urls not seen yet
             new_pages = pages.join(
                 membership.select("url"), "url", "left_anti"
             )
             if new_pages.limit(1).count() == 0:
+                if "sketches" in progress["open"]:
+                    # the crashed attempt appended both tables
+                    self._save("sketches", epoch)
                 return existing, membership
             # the sketch set is about to change. bands/pairs are NOT
-            # invalidated — their nid watermarks let them append exactly
-            # the delta on the next run_bands/run_pairs call (crash-safe:
-            # a crash between the appends below and those stages leaves
-            # the watermarks stale, and stale watermarks only mean the
-            # delta is re-derived, with content anti-joins preventing
-            # duplicates). clusters ARE stale (labels can merge), so:
-            # snapshot them as the incremental-CC base, then invalidate
-            # BEFORE any append — a crash mid-append can then never leave
-            # a _SUCCESS-marked clusters table computed over fewer pages
-            # than membership holds.
+            # invalidated — their epochs let them append exactly the new
+            # epoch's rows on the next run_bands/run_pairs call. clusters
+            # ARE stale (labels can merge), so: snapshot them as the
+            # incremental-CC base, then invalidate BEFORE any append — a
+            # crash mid-append can then never leave a _SUCCESS-marked
+            # clusters table computed over fewer pages than membership
+            # holds.
             if self._done("clusters"):
-                self._snapshot_clusters_base()
+                self.store.write(self._read("clusters"), "clusters_base")
+                self._save("clusters_base", progress["pairs"])
             self._invalidate("clusters")
             sk_new, mem_new = sketch_stage(new_pages, self.params)
             sk_new = sk_new.persist()
@@ -381,8 +445,13 @@ class CheckpointedDedup:
                     F.coalesce("_old_rep", "rep_url").alias("rep_url"),
                 )
             )
-            self.store.append(truly_new, "sketches")
+            self._save("sketches")
+            self.store.append(
+                truly_new.withColumn("batch", F.lit(epoch).cast("long")),
+                "sketches",
+            )
             self.store.append(mem_adj, "membership")
+            self._save("sketches", epoch)
             sk_new.unpersist()
             return self._read("sketches"), self._read("membership")
         sketches, membership = sketch_stage(pages, self.params)
@@ -391,27 +460,14 @@ class CheckpointedDedup:
         # the cache — without this, writing membership would re-run the
         # whole scan+sketch+groupBy a second time
         sketches = sketches.persist()
-        out_s = self._write(sketches, "sketches")
+        self._save("sketches")
+        out_s = self._write(
+            sketches.withColumn("batch", F.lit(0).cast("long")), "sketches"
+        )
         out_m = self._write(membership, "membership")
+        self._save("sketches", 0)
         sketches.unpersist()
         return out_s, out_m
-
-    def _snapshot_clusters_base(self) -> None:
-        """Freeze the current clusters (plus the pairs epoch they cover)
-        as the incremental-CC base before an append invalidates them."""
-        self.store.write(
-            self._read("clusters"), "clusters_base",
-            {"jam.params": self.params.to_json()},
-        )
-        epoch = 0
-        if self._done("pairs"):
-            epoch = (
-                self._read("pairs").agg(F.max("batch").alias("b"))
-                .collect()[0]["b"]
-                or 0
-            )
-        with open(os.path.join(self.root, "clusters_base_meta.json"), "w") as f:
-            json.dump({"epoch": epoch}, f)
 
     def run_bands(self, sketches: DataFrame) -> DataFrame:
         """Materialize the banded postings table — the persisted analogue
@@ -426,64 +482,18 @@ class CheckpointedDedup:
         mirroring the reference's sorted bulk load (BTreeMap staging +
         APPEND_DUP) and giving parquet run-length friendly pages.
 
-        Incremental: when the table exists, only sketches whose nid is
-        past the ``band_nids`` watermark are banded and APPENDED — the
-        existing postings are reused as-is (the reference appends to its
-        LMDB index the same way, src/file_io.rs:198-310, rather than
-        rebuilding it per import). A content anti-join makes the append
-        idempotent across crashes between the append and the watermark
-        write."""
+        Incremental: only sketch rows of epochs past the bands epoch are
+        banded and APPENDED — the existing postings are reused as-is
+        (the reference appends to its LMDB index the same way,
+        src/file_io.rs:198-310, rather than rebuilding it per import).
+        The full build bands every row through the same path."""
         from ._persist import track
         from .pairs import packed_bands, thin_hot_bkeys, with_nid
 
-        sk = with_nid(sketches)
-        if self._done("bands"):
-            bands = self._read("bands")
-            known = (
-                self._read("band_nids")
-                if self._done("band_nids")
-                else self.spark.createDataFrame([], "nid long")
-            )
-            new_sk = track(sk.join(known, "nid", "left_anti"))
-            if new_sk.limit(1).count() == 0:
-                return bands
-            t0 = time.time()
-            delta = thin_hot_bkeys(
-                track(packed_bands(new_sk, self.params, id_col="nid")),
-                self.params,
-                id_col="nid",
-            )
-            # crash idempotency: a retry whose previous attempt appended
-            # but died before the watermark write must not append twice.
-            # The anti-join is column-pruned but still reads the FULL
-            # postings table (|docs| x bands rows) — so it runs ONLY
-            # when the intent marker says a previous append window is
-            # still open; the clean-path daily append skips it
-            # (measured: the scan was ~30% of the bands-append wall at
-            # 1M docs / 10% delta, tools/incremental_bench.py).
-            # dirty if a previous window is open OR the watermark table
-            # is missing outright (a full build that crashed after its
-            # bands write — that window is marker-wrapped below, but a
-            # missing watermark is conclusive on its own).
-            # The key is the FULL (nid, bkey) row, not nid alone: a
-            # crashed append that committed only SOME part files for a
-            # nid (driver death mid job-commit) would otherwise drop
-            # that nid's remaining postings forever — missed candidates
-            # rather than duplicates (r5 ADVICE #2).
-            dirty = self._begin_append("bands")
-            if dirty or not self._done("band_nids"):
-                delta = delta.join(
-                    bands.select("nid", "bkey"), ["nid", "bkey"], "left_anti"
-                )
-            self._append(
-                delta.sortWithinPartitions("bkey"), "bands", t0
-            )
-            self.store.write(
-                sk.select("nid").distinct(), "band_nids",
-                {"jam.params": self.params.to_json()},
-            )
-            self._end_append("bands")
+        new_sk = self._pending(with_nid(sketches), "bands")
+        if new_sk is None:
             return self._read("bands")
+        t0 = time.time()
         # postings are keyed by the compact nid (8 bytes) — the reference
         # index likewise stores sketch IDS, not names, against each hash
         # key (src/file_io.rs:227-232); nid → url resolves via the
@@ -494,59 +504,36 @@ class CheckpointedDedup:
         # already hash-partitions on bkey, so the probe aggregate and the
         # write reuse that one exchange
         bands = thin_hot_bkeys(
-            track(packed_bands(sk, self.params, id_col="nid")),
+            track(packed_bands(new_sk, self.params, id_col="nid")),
             self.params,
             id_col="nid",
         )
-        bands = bands.sortWithinPartitions("bkey")
-        # the full build shares the append-window contract: a crash
-        # between the bands write and the watermark write leaves the
-        # marker open (and possibly a STALE band_nids from a prior
-        # epoch), so the next incremental run de-duplicates instead of
-        # appending rows the fresh table already holds
-        self._begin_append("bands")
-        out = self._write(bands, "bands")
-        self.store.write(
-            sk.select("nid").distinct(), "band_nids",
-            {"jam.params": self.params.to_json()},
+        return self._commit(
+            "bands", bands.sortWithinPartitions("bkey"), ["nid", "bkey"], t0
         )
-        self._end_append("bands")
-        return out
 
-    def run_pairs(self, sketches: DataFrame, bands: DataFrame | None = None) -> DataFrame:
-        """Verified pairs; ``batch`` stamps each append epoch so the
-        cluster stage can select exactly the delta edges.
+    def run_pairs(self, sketches: DataFrame, bands: DataFrame) -> DataFrame:
+        """Verified pairs; ``batch`` stamps each row with the sketch epoch
+        it covers so the cluster stage can select exactly the delta
+        edges.
 
         Incremental: candidates are generated from new-nid bands x ALL
         bands only — the old x old candidate space is already verified
         and its pairs kept. This is the judge-named "join new-vs-all for
-        the pair delta"; a content anti-join on (id_a, id_b) keeps crash
-        retries idempotent."""
+        the pair delta"."""
         from .pairs import candidate_pairs, remap_pairs, verify_pairs, with_nid
 
         sk = with_nid(sketches)
+        new_sk = self._pending(sk, "pairs")
+        if new_sk is None:
+            return self._read("pairs")
+        t0 = time.time()
         if self._done("pairs"):
-            pairs = self._read("pairs")
-            known = (
-                self._read("pair_nids")
-                if self._done("pair_nids")
-                else self.spark.createDataFrame([], "nid long")
-            )
-            from ._persist import track
-
-            new_ids = track(
-                sk.select("nid").distinct().join(known, "nid", "left_anti")
-            )
-            if new_ids.limit(1).count() == 0:
-                return pairs
-            t0 = time.time()
-            if bands is None:
-                bands = self.run_bands(sketches)
             # new-vs-all candidate join on the packed 8-byte bkey — the
             # same single-key join shape the in-memory pairs stage uses
             # (r5 VERDICT #5: the persisted path paid the wider
             # (band_id, band_hash) pair key on every append)
-            new_bands = bands.join(new_ids, "nid")
+            new_bands = bands.join(new_sk.select("nid"), "nid")
             x = new_bands.select("bkey", F.col("nid").alias("id_x"))
             y = bands.select("bkey", F.col("nid").alias("id_y"))
             cands = (
@@ -558,63 +545,31 @@ class CheckpointedDedup:
                 )
                 .distinct()
             )
-            pairs_n = verify_pairs(cands, sk, self.params, id_col="nid")
-            delta = remap_pairs(pairs_n, sk.select("nid", "url"))
-            # same intent-marker gating as run_bands: the retry
-            # anti-join against the existing pair set runs only when a
-            # previous append window is still open (or the watermark is
-            # missing — a crashed full build)
-            dirty = self._begin_append("pairs")
-            if dirty or not self._done("pair_nids"):
-                delta = delta.join(
-                    pairs.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
-                )
-            epoch = (
-                pairs.agg(F.max("batch").alias("b")).collect()[0]["b"] or 0
-            ) + 1
-            self._append(
-                delta.withColumn("batch", F.lit(epoch).cast("long")),
-                "pairs", t0,
-            )
-            self.store.write(
-                sk.select("nid").distinct(), "pair_nids",
-                {"jam.params": self.params.to_json()},
-            )
-            self._end_append("pairs")
-            return self._read("pairs")
-        if bands is not None:
-            cands = candidate_pairs(bands, id_col="nid")
-            pairs_n = verify_pairs(cands, sk, self.params, id_col="nid")
-            out_df = remap_pairs(pairs_n, sk.select("nid", "url"))
         else:
-            out_df = pairs_stage(sketches, self.params)
-        self._begin_append("pairs")
-        out = self._write(
-            out_df.withColumn("batch", F.lit(0).cast("long")), "pairs"
+            cands = candidate_pairs(bands, id_col="nid")
+        pairs_n = verify_pairs(cands, sk, self.params, id_col="nid")
+        delta = remap_pairs(pairs_n, sk.select("nid", "url")).withColumn(
+            "batch", F.lit(self._progress()["sketches"]).cast("long")
         )
-        self.store.write(
-            sk.select("nid").distinct(), "pair_nids",
-            {"jam.params": self.params.to_json()},
-        )
-        self._end_append("pairs")
-        return out
+        return self._commit("pairs", delta, ["id_a", "id_b"], t0)
 
     def run_clusters(self, pairs: DataFrame, membership: DataFrame) -> DataFrame:
         """Duplicate-cluster closure. Incremental: when a
         ``clusters_base`` snapshot exists, CC runs over the previous
-        labels' star edges plus ONLY the pair batches newer than the
-        snapshot epoch — O(delta + labels) edges instead of O(all
-        pairs). Star edges preserve components (and their min-id
-        labels) exactly, so output equals a from-scratch run."""
+        labels' star edges plus ONLY the pair rows of epochs past the
+        snapshot's — O(delta + labels) edges instead of O(all pairs).
+        Star edges preserve components (and their min-id labels)
+        exactly, so output equals a from-scratch run."""
         if self._done("clusters"):
             return self._read("clusters")
-        meta_path = os.path.join(self.root, "clusters_base_meta.json")
         edge_cols = [F.col("id_a"), F.col("id_b")]
         rep_nodes = membership.select(F.col("rep_url").alias("url")).distinct()
-        if self._done("clusters_base") and os.path.exists(meta_path):
-            with open(meta_path) as f:
-                base_epoch = json.load(f)["epoch"]
-            base = self._read("clusters_base")
+        # a crash between the snapshot write and its record leaves an
+        # OLDER epoch (more delta edges, still the same components) or
+        # none (a full CC)
+        base_epoch = self._progress().get("clusters_base")
+        if self._done("clusters_base") and base_epoch is not None:
+            base = self.store.read("clusters_base")
             delta_edges = pairs.filter(F.col("batch") > base_epoch).select(
                 *edge_cols
             )

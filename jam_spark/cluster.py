@@ -62,33 +62,24 @@ def connected_components(
     # collected (driver path) or iterated (distributed path) — without
     # persistence the whole upstream pairs pipeline would recompute
     e0 = track(e0)
-    # ONE job sizes the edge set AND fetches it when it fits: below the
-    # threshold the limited toPandas IS the full edge set, so the driver
-    # path starts with the edges in hand instead of paying a separate
-    # count job first (union-find is order-independent, so the limit's
-    # arbitrary row order does not affect labels).
-    pdf = e0.limit(driver_threshold + 1).toPandas()
-    if len(pdf) <= driver_threshold:
-        out = _cc_driver(e0, nodes, pdf)
-    else:
-        out = _cc_distributed(e0, nodes, max_iter, checkpoint_dir)
-    return out
+    # size the edge set BEFORE anything reaches the driver: the count's
+    # only result is one long, and it materializes the persisted edges
+    # the collect or the distributed path then reads
+    if e0.count() <= driver_threshold:
+        return _cc_driver(e0, nodes)
+    return _cc_distributed(e0, nodes, max_iter, checkpoint_dir)
 
 
-def _cc_driver(
-    e0: DataFrame, nodes: DataFrame | None, pdf=None
-) -> DataFrame:
+def _cc_driver(e0: DataFrame, nodes: DataFrame | None) -> DataFrame:
     """Collect edges (NOT the corpus) to the driver via Arrow, integer
     union-find over factorized ids, broadcast the labels back. Only
     multi-member clusters need a labels row — nodes absent from the label
-    map are singletons of themselves. ``pdf``: the already-fetched edge
-    frame from the caller's size probe (skips a second collect job)."""
+    map are singletons of themselves."""
     import numpy as np
     import pandas as pd
 
     spark = e0.sparkSession
-    if pdf is None:
-        pdf = e0.toPandas()  # Arrow path: ~seconds for millions of edges
+    pdf = e0.toPandas()  # Arrow path: ~seconds for millions of edges
     if nodes is None:
         universe = e0.select(F.col("src").alias("url")).union(
             e0.select(F.col("dst").alias("url"))

@@ -198,7 +198,6 @@ def verify_pairs(
     candidates: DataFrame,
     sketches: DataFrame,
     params: SketchParams,
-    broadcast_sketches: bool = False,
     id_col: str = "url",
 ) -> DataFrame:
     """Join candidate ids back to their sketches and compute exact
@@ -214,8 +213,6 @@ def verify_pairs(
         F.col("sketch").alias("_vsketch"),
         F.col("num_hashes").alias("_vn"),
     )
-    if broadcast_sketches:
-        sk = F.broadcast(sk)
     j = (
         candidates.join(sk.withColumnsRenamed({"_vid": "id_a", "_vsketch": "sketch_a", "_vn": "n_a"}), "id_a")
         .join(sk.withColumnsRenamed({"_vid": "id_b", "_vsketch": "sketch_b", "_vn": "n_b"}), "id_b")

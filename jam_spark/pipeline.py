@@ -45,7 +45,6 @@ def sketch_stage(
     pages: DataFrame,
     params: SketchParams,
     dedup_exact_first: bool = True,
-    n_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Returns (sketches, membership).
 
@@ -122,19 +121,15 @@ def sketch_stage(
         )
     else:
         membership = pages.select("url", F.col("url").alias("rep_url"))
-        n_partitions = (
-            n_partitions
-            or pages.sparkSession.sparkContext.defaultParallelism
+        sketches = pages.repartition(
+            pages.sparkSession.sparkContext.defaultParallelism, "url"
+        ).select("url", sketch_col.alias("sketch")).withColumn(
+            "num_hashes", F.size("sketch")
         )
-        sketches = pages.repartition(n_partitions, "url").select(
-            "url", sketch_col.alias("sketch")
-        ).withColumn("num_hashes", F.size("sketch"))
     return sketches, membership
 
 
-def pairs_stage(
-    sketches: DataFrame, params: SketchParams, broadcast_sketches: bool = False
-) -> DataFrame:
+def pairs_stage(sketches: DataFrame, params: SketchParams) -> DataFrame:
     """sketches → verified duplicate pairs above cutoff.
 
     The exploded bands table (|docs| × bands rows), its persist, the
@@ -155,7 +150,7 @@ def pairs_stage(
     bands = track(packed_bands(sk, params, id_col="nid"))
     bands = thin_hot_bkeys(bands, params, id_col="nid")
     cands = candidate_pairs(bands, id_col="nid")
-    pairs_n = verify_pairs(cands, sk, params, broadcast_sketches, id_col="nid")
+    pairs_n = verify_pairs(cands, sk, params, id_col="nid")
     return remap_pairs(pairs_n, sk.select("nid", "url"))
 
 
@@ -177,8 +172,6 @@ def cluster_stage(
 def dedup_pipeline(
     pages: DataFrame,
     params: SketchParams | None = None,
-    dedup_exact_first: bool = True,
-    broadcast_sketches: bool = False,
     text_from_html: bool = False,
 ) -> DataFrame:
     """Full pipeline: pages → (url, cluster_id).
@@ -196,12 +189,12 @@ def dedup_pipeline(
         from .ops.text import html_text_col
 
         pages = pages.withColumn("text", html_text_col())
-    sketches, membership = sketch_stage(pages, params, dedup_exact_first)
+    sketches, membership = sketch_stage(pages, params)
     # sketches feed the band UDF and both sides of the verify join;
     # membership feeds rep_nodes and the final label join — persist both
     # so the sketch UDF and the exact-group shuffle run exactly once
     # eager: bands + both verify joins consume it
     sketches = track(sketches, eager=True)
     membership = track(membership)
-    pairs = pairs_stage(sketches, params, broadcast_sketches)
+    pairs = pairs_stage(sketches, params)
     return cluster_stage(pairs, membership)

@@ -12,9 +12,9 @@ Delivery semantics — why this is exactly-once WITHOUT a two-phase
 commit: the streaming checkpoint (file-source log) replays a
 micro-batch after a crash, i.e. at-least-once delivery into the sink;
 ``CheckpointedDedup.run`` is idempotent under replay (``url`` anti-join
-guards membership, ``text_fp`` anti-join guards sketches, nid
-watermarks guard bands/pairs — exercised by
-``test_pipeline_resume.py::test_resume_after_crash_between_appends``),
+guards membership, ``text_fp`` anti-join guards sketches, the
+per-stage epochs and append windows of ``progress.json`` guard
+bands/pairs — exercised by ``test_pipeline_resume.py``),
 so replaying a batch re-derives an empty delta instead of duplicating
 rows. At-least-once delivery composed with an idempotent merge is
 effectively exactly-once.

@@ -146,3 +146,27 @@ def test_distributed_cc_reliable_checkpoint(spark, tmp_path):
         for f in fs
     ]
     assert ck_files, "no reliable checkpoint files written"
+
+
+def test_cc_above_threshold_collects_no_edges(spark, monkeypatch):
+    """Above ``driver_threshold`` the edge set must never reach the
+    driver: the size probe is a count, so with ``toPandas`` made to
+    raise the distributed path still returns union-find's labels."""
+    from jam_spark.cluster import connected_components
+
+    pairs = [(f"u{i:02d}", f"u{i + 1:02d}") for i in range(10)] + [
+        ("a", "b"), ("c", "d"), ("b", "d"),
+    ]
+    edges = spark.createDataFrame(pairs, ["id_a", "id_b"])
+    want = O.cluster(sorted({u for p in pairs for u in p}), pairs)
+
+    def no_collect(self):
+        raise AssertionError("edges collected above driver_threshold")
+
+    # the session's concrete DataFrame class defines its own toPandas
+    monkeypatch.setattr(type(edges), "toPandas", no_collect)
+    got = {
+        r["url"]: r["cluster_id"]
+        for r in connected_components(edges, driver_threshold=5).collect()
+    }
+    assert got == want

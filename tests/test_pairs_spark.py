@@ -241,3 +241,63 @@ def test_packed_bands_candidates_match_python_reference(
     assert got == want
     assert len(got) > 0
     assert (largest > band_cap) == (band_cap == 8)  # the cap-8 case thins
+
+
+def _plan_nodes(node):
+    """Physical plan nodes above the cache: unwraps adaptive and
+    query-stage wrappers and stops at ``InMemoryTableScan``, whose
+    cached plan ran when the cache was built."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _plan_nodes(node.executedPlan())
+    if name == "InMemoryTableScan":
+        return [node]
+    kids = node.children()
+    return [node] + [
+        n for i in range(kids.size()) for n in _plan_nodes(kids.apply(i))
+    ]
+
+
+@pytest.mark.parametrize("band_cap", [256, 8])
+def test_packed_bands_single_exchange(spark, pages_df, band_cap):
+    """The property pairs_stage rests on: over the cached
+    hash-partitioned (bkey, nid) postings, the hot-key thinning and the
+    candidate self-join plan no further bkey exchange — the one shuffle
+    left is the (id_a, id_b) distinct. Broadcast joins are switched off
+    while planning, as they are for postings too large to broadcast;
+    the hot-key table keeps its explicit broadcast hint."""
+    from jam_spark._persist import release_all, track
+    from jam_spark.pairs import (
+        candidate_pairs,
+        packed_bands,
+        thin_hot_bkeys,
+        with_nid,
+    )
+
+    params = SketchParams(band_cap=band_cap)
+    sketches, _ = sketch_stage(pages_df, params)
+    sk = with_nid(track(sketches, eager=True))
+    cands = candidate_pairs(
+        thin_hot_bkeys(
+            track(packed_bands(sk, params, id_col="nid")),
+            params,
+            id_col="nid",
+        ),
+        id_col="nid",
+    )
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        nodes = _plan_nodes(cands._jdf.queryExecution().executedPlan())
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+        release_all()
+    assert any(n.nodeName() == "InMemoryTableScan" for n in nodes)
+    shuffles = [
+        n.outputPartitioning().toString()
+        for n in nodes
+        if n.nodeName() == "Exchange"
+    ]
+    assert not [s for s in shuffles if "hashpartitioning(bkey" in s], shuffles
+    assert len(shuffles) == 1, shuffles
+    assert shuffles[0].startswith("hashpartitioning(id_a"), shuffles

@@ -4,6 +4,7 @@ per-partition lineage metrics recorded."""
 
 import json
 import os
+import shutil
 
 import pytest
 
@@ -171,8 +172,6 @@ def test_resume_after_crash_between_appends(spark, tmp_path):
     """Crash window: downstream invalidated + new sketches appended, but
     membership NOT yet appended. The next run() must converge to exactly
     the fresh-run state — no duplicate sketch rows, no missing pages."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from jam_spark.pipeline import sketch_stage
@@ -193,9 +192,9 @@ def test_resume_after_crash_between_appends(spark, tmp_path):
         shutil.rmtree(os.path.join(root, stage), ignore_errors=True)
     sk_new, _ = sketch_stage(new_pages, params)
     existing = spark.read.parquet(os.path.join(root, "sketches"))
-    sk_new.join(existing.select("text_fp"), "text_fp", "left_anti").write.mode(
-        "append"
-    ).parquet(os.path.join(root, "sketches"))
+    sk_new.join(existing.select("text_fp"), "text_fp", "left_anti").withColumn(
+        "batch", F.lit(1).cast("long")
+    ).write.mode("append").parquet(os.path.join(root, "sketches"))
     # ... crash here: membership never appended
 
     got = _clusters_dict(CheckpointedDedup(spark, root, params).run(pages_all))
@@ -271,9 +270,16 @@ def test_incremental_append_reuses_bands_and_pairs(spark, tmp_path):
     assert set(r["batch"] for r in pairs.select("batch").distinct().collect()) <= {0, 1}
 
     # clusters closed incrementally: the previous labels were snapshotted
-    # as the CC base before the append invalidated them
+    # as the CC base (covering pairs epoch 0) before the append
+    # invalidated them; every stage absorbed epoch 1, no window open
     assert os.path.exists(os.path.join(root, "clusters_base", "_SUCCESS"))
-    assert os.path.exists(os.path.join(root, "clusters_base_meta.json"))
+    with open(os.path.join(root, "progress.json")) as f:
+        progress = _json.load(f)
+    assert progress == {
+        "sketches": 1, "bands": 1, "pairs": 1, "clusters_base": 0, "open": []
+    }
+    sketch_epochs = spark.read.parquet(os.path.join(root, "sketches"))
+    assert {r["batch"] for r in sketch_epochs.select("batch").distinct().collect()} == {0, 1}
 
 
 def test_incremental_append_twice_converges(spark, tmp_path):
@@ -365,112 +371,114 @@ def test_null_text_pages_kept_and_not_resketched(spark, tmp_path):
     assert got == _clusters_dict(dedup_pipeline(pages_all, params))
 
 
-def test_crash_between_bands_append_and_watermark(spark, tmp_path):
-    """The bands idempotency anti-join is gated on an append-intent
-    marker: a retry after a crash INSIDE the append window (postings
-    appended, band_nids watermark stale, marker left open) must not
-    duplicate postings, and must converge to the from-scratch state."""
-    import os as _os
+def _crash_on_close(monkeypatch, stage):
+    """Make the next close of ``stage``'s append window raise: the crash
+    lands after the stage's table write, before its epoch is recorded."""
+    save = CheckpointedDedup._save
 
-    from pyspark.sql import functions as F
+    def crashing(self, name, epoch=None):
+        if name == stage and epoch is not None:
+            monkeypatch.setattr(CheckpointedDedup, "_save", save)
+            raise RuntimeError(f"crash before closing the {stage} window")
+        return save(self, name, epoch)
 
-    from jam_spark.pairs import packed_bands, thin_hot_bkeys, with_nid
-    from jam_spark.pipeline import dedup_pipeline
-
-    params = SketchParams()
-    pages_all = spark.createDataFrame(
-        pages_to_pandas(generate_pages(n_docs=120, seed=13))
-    ).cache()
-    first = pages_all.limit(80)
-    root = str(tmp_path / "ck_bandcrash")
-    CheckpointedDedup(spark, root, params).run(first)
-
-    # stage the incremental sketches (the crashed attempt got past
-    # run_sketches), then replicate its bands append BY HAND: marker
-    # written, delta postings appended, watermark NOT rewritten
-    ck = CheckpointedDedup(spark, root, params)
-    sketches, _ = ck.run_sketches(pages_all)
-    sk = with_nid(spark.read.parquet(_os.path.join(root, "sketches")))
-    known = spark.read.parquet(_os.path.join(root, "band_nids"))
-    new_sk = sk.join(known, "nid", "left_anti")
-    assert new_sk.count() > 0
-    delta = thin_hot_bkeys(
-        packed_bands(new_sk, params, id_col="nid"), params, id_col="nid"
-    )
-    with open(_os.path.join(root, "bands.append_intent"), "w") as f:
-        f.write("{}")
-    delta.write.mode("append").parquet(_os.path.join(root, "bands"))
-    # ... crash here: band_nids stale, marker left open
-
-    got = _clusters_dict(CheckpointedDedup(spark, root, params).run(pages_all))
-    want = _clusters_dict(dedup_pipeline(pages_all, params))
-    assert got == want
-
-    bands = spark.read.parquet(_os.path.join(root, "bands"))
-    n_rows = bands.count()
-    n_distinct = bands.select("nid", "bkey").distinct().count()
-    assert n_rows == n_distinct, "retry duplicated postings"
-    # both append windows closed cleanly
-    assert not _os.path.exists(_os.path.join(root, "bands.append_intent"))
-    assert not _os.path.exists(_os.path.join(root, "pairs.append_intent"))
+    monkeypatch.setattr(CheckpointedDedup, "_save", crashing)
 
 
-def test_crash_during_full_bands_rebuild_with_stale_watermark(spark, tmp_path):
-    """Full-build crash window: bands fully rewritten for ALL nids but
-    the watermark write never ran, leaving band_nids STALE from an
-    earlier epoch (plus the open intent marker). The next run takes the
-    incremental branch, recomputes a delta for nids the fresh table
-    already holds — and must de-duplicate instead of appending them."""
-    import os as _os
-    import shutil as _shutil
+def _progress(root):
+    with open(os.path.join(root, "progress.json")) as f:
+        return json.load(f)
 
-    from jam_spark.pairs import packed_bands, thin_hot_bkeys, with_nid
-    from jam_spark.pipeline import dedup_pipeline
 
-    params = SketchParams()
-    pages_all = spark.createDataFrame(
-        pages_to_pandas(generate_pages(n_docs=120, seed=13))
-    ).cache()
-    first = pages_all.limit(80)
-    root = str(tmp_path / "ck_fullcrash")
-    CheckpointedDedup(spark, root, params).run(first)
-
-    # new sketches land, then bands are invalidated (as a params-safe
-    # rebuild would) while the old band_nids survives
-    ck = CheckpointedDedup(spark, root, params)
-    ck.run_sketches(pages_all)
-    _shutil.rmtree(_os.path.join(root, "bands"))
-
-    # the crashed rebuild: marker open, FULL bands written, watermark
-    # never rewritten (still the 80-page epoch's nid set)
-    sk = with_nid(spark.read.parquet(_os.path.join(root, "sketches")))
-    full_bands = thin_hot_bkeys(
-        packed_bands(sk, params, id_col="nid"), params, id_col="nid"
-    )
-    with open(_os.path.join(root, "bands.append_intent"), "w") as f:
-        f.write("{}")
-    full_bands.write.mode("overwrite").parquet(_os.path.join(root, "bands"))
-    # ... crash here
-
-    got = _clusters_dict(CheckpointedDedup(spark, root, params).run(pages_all))
-    want = _clusters_dict(dedup_pipeline(pages_all, params))
-    assert got == want
-    bands = spark.read.parquet(_os.path.join(root, "bands"))
-    assert (
-        bands.count()
-        == bands.select("nid", "bkey").distinct().count()
-    ), "stale-watermark retry duplicated postings"
-    assert not _os.path.exists(_os.path.join(root, "bands.append_intent"))
+_CONTENT_KEY = {"bands": ["nid", "bkey"], "pairs": ["id_a", "id_b"]}
 
 
 @pytest.mark.parametrize("stage", ["bands", "pairs"])
+def test_crash_between_append_and_window_close(
+    spark, tmp_path, monkeypatch, stage
+):
+    """An incremental append that dies after writing its delta but
+    before closing its window (the epoch still the old one, the window
+    left open in progress.json) must not duplicate rows on retry: the
+    open window makes the retry anti-join the re-derived delta against
+    the table, and the run converges to the from-scratch state."""
+    params = SketchParams()
+    pages_all = spark.createDataFrame(
+        pages_to_pandas(generate_pages(n_docs=120, seed=13))
+    ).cache()
+    root = str(tmp_path / f"ck_crash_{stage}")
+    CheckpointedDedup(spark, root, params).run(pages_all.limit(80))
+    base_rows = spark.read.parquet(os.path.join(root, stage)).count()
+
+    _crash_on_close(monkeypatch, stage)
+    with pytest.raises(RuntimeError, match="crash"):
+        CheckpointedDedup(spark, root, params).run(pages_all)
+    progress = _progress(root)
+    assert progress["open"] == [stage] and progress[stage] == 0
+    # the crashed attempt did append its delta
+    assert spark.read.parquet(os.path.join(root, stage)).count() > base_rows
+
+    got = _clusters_dict(CheckpointedDedup(spark, root, params).run(pages_all))
+    want = _clusters_dict(dedup_pipeline(pages_all, params))
+    assert got == want
+
+    table = spark.read.parquet(os.path.join(root, stage))
+    key = _CONTENT_KEY[stage]
+    assert table.count() == table.select(*key).distinct().count(), (
+        f"retry duplicated {stage} rows"
+    )
+    progress = _progress(root)
+    assert progress["open"] == [] and progress[stage] == 1
+
+
+def test_crash_during_full_bands_rebuild_with_stale_watermark(
+    spark, tmp_path, monkeypatch
+):
+    """Full-build crash window: bands fully rewritten for ALL rows but
+    the window never closed, leaving the recorded bands epoch STALE
+    (0, while the sketches are at epoch 1). The next run takes the
+    incremental branch, re-derives epoch 1's postings that the fresh
+    table already holds — and must de-duplicate instead of appending
+    them."""
+    params = SketchParams()
+    pages_all = spark.createDataFrame(
+        pages_to_pandas(generate_pages(n_docs=120, seed=13))
+    ).cache()
+    root = str(tmp_path / "ck_fullcrash")
+    CheckpointedDedup(spark, root, params).run(pages_all.limit(80))
+
+    # new sketches land (epoch 1), then bands are removed (as a
+    # params-safe rebuild would) while their recorded epoch survives
+    ck = CheckpointedDedup(spark, root, params)
+    sketches, _ = ck.run_sketches(pages_all)
+    shutil.rmtree(os.path.join(root, "bands"))
+
+    # the crashed rebuild: FULL bands written, window never closed
+    _crash_on_close(monkeypatch, "bands")
+    with pytest.raises(RuntimeError, match="crash"):
+        ck.run_bands(sketches)
+    progress = _progress(root)
+    assert progress["open"] == ["bands"]
+    assert (progress["sketches"], progress["bands"]) == (1, 0)
+
+    got = _clusters_dict(CheckpointedDedup(spark, root, params).run(pages_all))
+    want = _clusters_dict(dedup_pipeline(pages_all, params))
+    assert got == want
+    bands = spark.read.parquet(os.path.join(root, "bands"))
+    assert (
+        bands.count()
+        == bands.select("nid", "bkey").distinct().count()
+    ), "stale-epoch retry duplicated postings"
+    assert _progress(root)["open"] == []
+
+
+@pytest.mark.parametrize("stage", ["sketches", "bands", "pairs"])
 def test_old_layout_root_refused(spark, tmp_path, stage):
     """A root whose bands table is still unpacked (nid, band_id,
-    band_hash) or whose pairs table predates the ``batch`` epoch is not
-    migrated: resuming on it is refused with a ValueError that names the
-    root and says to rebuild it."""
+    band_hash) or whose sketches or pairs table predates the ``batch``
+    epoch is not migrated: resuming on it is refused with a ValueError
+    that names the root and says to rebuild it."""
     import re
-    import shutil
 
     from pyspark.sql import functions as F
 

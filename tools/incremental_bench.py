@@ -5,10 +5,11 @@ not an O(corpus) recompute.
 The north rule's resumable-checkpoint requirement exists because at
 10^12 documents the pipeline's real recurring cost is the INGEST loop —
 re-running dedup from scratch on every append is O(corpus) per day.
-`CheckpointedDedup.run` instead sketches only unseen urls, appends the
-new reps' bands to the postings table, joins new-vs-all for the pair
-delta, and closes clusters incrementally from the snapshotted labels
-(checkpoint.py run_sketches/run_bands/run_pairs/run_clusters). The
+`CheckpointedDedup.run` instead sketches only unseen urls under a new
+epoch, appends the bands of that epoch's reps to the postings table,
+joins new-vs-all for the pair delta, and closes clusters incrementally
+from the snapshotted labels (checkpoint.py
+run_sketches/run_bands/run_pairs/run_clusters). The
 correctness of that path is pytest-gated (test_pipeline_resume); this
 tool measures its COST against the from-scratch alternative.
 
@@ -28,14 +29,16 @@ than scratch(1M), a pure weather artifact):
      evidence: bands rows ~= delta_docs x bands/doc, pairs rows =
      the delta edge set).
 
-The incremental wall sits above frac x scratch because three costs are
-O(corpus)-READ even when writes are O(delta): the membership/sketch
-anti-join probes, the crash-idempotency anti-join against the existing
-postings, and the new-vs-all half of the candidate join. All are
-column-pruned scans (url / nid / band-key columns only), so they scale
-with corpus BYTES READ, not corpus SHUFFLE — the from-scratch run pays
-full shuffles over the same rows. Cluster equality vs from-scratch is
-asserted every run.
+The incremental wall sits above frac x scratch because some costs are
+O(corpus)-READ even when writes are O(delta): the membership url and
+sketch text_fp anti-join probes, the epoch filter that picks the new
+sketch rows for bands and pairs, and the new-vs-all half of the
+candidate join (the crash-idempotency anti-join against the existing
+postings runs only on a retry that finds its append window open). All
+are column-pruned scans (url / text_fp / batch / band-key columns), so
+they scale with corpus BYTES READ, not corpus SHUFFLE — the from-scratch
+run pays full shuffles over the same rows. Cluster equality vs
+from-scratch is asserted every run.
 
 Usage: python tools/incremental_bench.py [--docs 1000000] [--frac 0.1]
        [--cores 16] [--reps 2] [--out BENCH/incremental.json]
