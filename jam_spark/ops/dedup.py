@@ -1,12 +1,27 @@
-"""Deduplication operators over ``documents(doc_id, text, ...)``:
+"""Deduplication and corpus-curation operators over
+``documents(doc_id, text, ...)``; every query family except MinHash has
+a DuckDB ``*_sql()`` twin:
 
-- exact dedup (md5 hash-groupBy) — SQL-checkable
-- n-gram Jaccard near-dup pairs — SQL-checkable
-- SimHash fingerprints + near-dup pairs — SQL-checkable (portable 60-bit
-  hex-cast token hashes; no engine-specific hash functions)
-- MinHash+LSH (the core jam-rs-semantics engine from jam_spark.pipeline)
-  — Spark-only (xxh3 not expressible in ANSI SQL), verified against the
-  pure-Python oracle in pytest instead.
+- exact dedup groups/members, corpus dedup report, group-size
+  histogram, per-source rollup (md5 hash-groupBy)
+- shared-key pair families — n-gram Jaccard pairs, cross-source n-gram
+  overlap, winnow dup pairs — all one capped shared-key self-join
+  (:func:`_shared_key_pairs`, the relational form of the jam-rs
+  inverted-index probe, src/compare.rs:344-352)
+- duplicate clusters over the n-gram, winnow and SimHash edge sets
+  (:func:`_dup_clusters`: the hybrid CC of jam_spark.cluster against a
+  recursive-CTE min-label oracle)
+- benchmark decontamination (broadcast gram probe) and the training
+  funnel built on it
+- duplicated substring spans
+- SimHash fingerprints, banded-hamming pairs, mirror groups (portable
+  60-bit hex-cast token hashes; no engine-specific hash functions)
+- MinHash+LSH sketches/pairs/clusters/merge (the core jam-rs-semantics
+  engine from jam_spark.pipeline) — Spark-only (xxh3 not expressible in
+  ANSI SQL), verified against the pure-Python oracle in pytest instead
+- URL canonicalization dedup and re-crawl collapse, hash-stratified
+  sampling, the token-budget mix planner and report, corpus-level line
+  dedup, token-balanced output shards
 """
 
 from __future__ import annotations
@@ -15,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .._persist import track
+from ..cluster import connected_components
 from ..pairs import cap_hot_keys
 from ..params import SketchParams
 from ..pipeline import dedup_pipeline, pairs_stage, sketch_stage
@@ -35,6 +51,62 @@ def _drop_hot_keys(df: DataFrame, key: str, max_count: int) -> DataFrame:
         .select(key)
     )
     return df.join(F.broadcast(hot), key, "left_anti")
+
+
+def _shared_key_pairs(
+    postings: DataFrame, owner: str, key: str, max_df: int
+) -> DataFrame:
+    """(a, b, n_shared, n_a, n_b) for every owner pair a < b sharing at
+    least one ``key``: the capped shared-key self-join, the relational
+    form of the jam-rs inverted-index probe (src/compare.rs:344-352,
+    hash → sketch-ids, then a count of shared entries per pair).
+
+    ``postings`` are distinct ``(owner, key)`` rows. A key held by more
+    than ``max_df`` owners is dropped (:func:`_drop_hot_keys`) from the
+    shared count AND both sizes ``n_a``/``n_b``, so any score built from
+    them stays consistent under the cap and pair work is bounded at
+    O(n_keys × max_df²/2); the SQL twins apply the identical cap.
+
+    Plan contract: callers pass ``postings`` PERSISTED (``track``) and
+    hash-partitioned on ``key`` (``repartition(key)``). Rows of a key are
+    then colocated, so the hot-key partial aggregate collapses each key
+    before its exchange, and any plan built AFTER the cache materializes
+    (a later action over the same frame — the *_clusters queries) sees
+    the cached HashPartitioning and plans no exchange at all (probed on
+    4.1, default canChangeCachedPlanOutputPartitioning=false; a plan
+    built before materialization still inserts its own exchanges —
+    measured net faster regardless). The big win is materialize-once:
+    without the persist Catalyst duplicates the differently-pruned
+    explode / winnow subtree per consumer — the round-5 plans ran up to
+    8 scans + explodes per query (plans/r06/*_before.txt)."""
+    kept = _drop_hot_keys(postings, key, max_df)
+    sizes = kept.groupBy(owner).agg(F.count(F.lit(1)).alias("sz"))
+    shared = (
+        kept.select(F.col(owner).alias("a"), key)
+        .join(kept.select(F.col(owner).alias("b"), key), key)
+        .filter(F.col("a") < F.col("b"))
+        .groupBy("a", "b")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+    return shared.join(
+        sizes.select(F.col(owner).alias("a"), F.col("sz").alias("n_a")), "a"
+    ).join(
+        sizes.select(F.col(owner).alias("b"), F.col("sz").alias("n_b")), "b"
+    )
+
+
+def _dup_clusters(edges: DataFrame, documents: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) as longs — connected components over
+    ``(doc_a, doc_b)`` edges with the documents universe, so singleton
+    docs label themselves (the hybrid CC of
+    :func:`jam_spark.cluster.connected_components`)."""
+    out = connected_components(
+        edges, documents.select("doc_id"), id_a="doc_a", id_b="doc_b"
+    )
+    return out.select(
+        F.col("url").cast("long").alias("doc_id"),
+        F.col("cluster_id").cast("long").alias("cluster_id"),
+    )
 
 
 # ---------------------------------------------------------------- exact
@@ -125,73 +197,39 @@ def ngram_jaccard_pairs(
     max_df: int = 1000,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard for all pairs above ``threshold``
-    (strict >), computed distributively: explode distinct n-grams,
-    equi-join on the gram, count common per pair, Jaccard from exact
-    integer counts. This is the same join shape as the reference's
-    inverted-index probe (src/compare.rs:344-352) with n-grams as keys.
+    (strict >): distinct n-grams are the keys of the capped shared-key
+    self-join (:func:`_shared_key_pairs`), and Jaccard is one division
+    of its exact integer counts.
 
-    Skew guard (the 100 TB concern): a gram shared by m docs produces m²
-    join rows, and web boilerplate grams reach m in the millions. Grams
-    with document frequency > ``max_df`` are dropped from BOTH the
-    numerator and the denominator (:func:`_drop_hot_keys`: df counts
-    come from a map-side-combined partial aggregate and the hot-gram set
-    is broadcast) — a gram in thousands of docs carries no Jaccard
-    signal. The SQL oracle applies the identical cap, so parity holds at
-    every scale; pair work is bounded at O(n_grams × max_df²/2).
+    Skew guard (the 100 TB concern): web boilerplate grams reach
+    millions of docs and carry no Jaccard signal, so grams with document
+    frequency > ``max_df`` are dropped from BOTH the numerator and the
+    denominator; the SQL oracle applies the identical cap, so parity
+    holds at every scale.
     """
     # _ngrams_col is array_distinct per doc — explode output is already
-    # (doc_id, gram)-distinct. ONE scan+explode+gram-exchange, PERSISTED
-    # hash-partitioned on the join key (the packed_bands move from the
-    # flagship's pairs stage): gram rows are colocated, so the hot-df
-    # partial aggregate collapses each gram before its exchange, and any
-    # plan built AFTER the cache materializes (a later action over the
-    # same frame — the *_clusters queries) sees the cached
-    # HashPartitioning and plans no exchange at all (probed on 4.1,
-    # default canChangeCachedPlanOutputPartitioning=false; a plan built
-    # before materialization still inserts its own exchanges — measured
-    # net faster regardless). The big win is materialize-once: without
-    # the persist Catalyst duplicates the differently-pruned explode
-    # subtree per consumer — the round-5 plan ran 8 scans + 8 gram
-    # explodes for this query
-    # (plans/r06/ngram_jaccard_pairs_before.txt).
-    raw = track(
+    # (doc_id, gram)-distinct; persisted and gram-partitioned per the
+    # :func:`_shared_key_pairs` plan contract
+    grams = track(
         ensure_scan_parallelism(documents)
         .select("doc_id", F.explode(_ngrams_col(n)).alias("gram"))
         .repartition("gram")
     )
-    grams = _drop_hot_keys(raw, "gram", max_df)
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    g1 = grams.select(F.col("doc_id").alias("doc_a"), "gram")
-    g2 = grams.select(F.col("doc_id").alias("doc_b"), "gram")
-    common = (
-        g1.join(g2, "gram")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
+    jaccard = F.col("n_shared").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_shared")
     )
-    out = (
-        common.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("n_b")),
-            "doc_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_common").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_common")),
-        )
+    return (
+        _shared_key_pairs(grams, "doc_id", "gram", max_df)
+        .withColumn("jaccard", jaccard)
         .filter(F.col("jaccard") > threshold)
-    )
-    return out.select(
-        F.col("doc_a").cast("long"),
-        F.col("doc_b").cast("long"),
-        F.col("n_common").cast("long"),
-        F.col("n_a").cast("long"),
-        F.col("n_b").cast("long"),
-        "jaccard",
+        .select(
+            F.col("a").cast("long").alias("doc_a"),
+            F.col("b").cast("long").alias("doc_b"),
+            F.col("n_shared").cast("long").alias("n_common"),
+            F.col("n_a").cast("long"),
+            F.col("n_b").cast("long"),
+            "jaccard",
+        )
     )
 
 
@@ -245,72 +283,35 @@ def source_ngram_overlap(
     content, how much of source B is already inside source A). One row
     per unordered source pair sharing >= 1 eligible gram.
 
-    Skew/scale guard: a gram present in m sources emits C(m, 2) join
-    rows, and universal boilerplate reaches every domain on the web —
-    grams with source reach > ``max_sources`` carry no mixing signal
-    and are dropped from BOTH the shared counts and the per-source
-    vocabularies (the jaccard stays internally consistent under the
-    cap; same move as ngram_jaccard_pairs's ``max_df``). Join work is
-    bounded at O(n_grams x max_sources^2 / 2) at any corpus size, and
-    the output is C(n_sources, 2) rows — a driver-safe summary by
-    construction.
-
-    Plan shape: one persisted gram-partitioned distinct (source, gram)
-    aggregate; the hot-gram reach set is a broadcast anti-join; the
-    reach aggregate and both self-join sides are exchange-free over the
-    cache.
+    Skew/scale guard: universal boilerplate reaches every domain on the
+    web, so grams with source reach > ``max_sources`` carry no mixing
+    signal and are dropped from BOTH the shared counts and the
+    per-source vocabularies — the ``max_df`` cap of
+    :func:`_shared_key_pairs` with sources as owners. The output is
+    C(n_sources, 2) rows — a driver-safe summary by construction.
     """
-    docs = ensure_scan_parallelism(documents)
     # explode is per-doc distinct (array_distinct); the corpus-level
-    # distinct collapses same-source repeats so count(1) per gram below
-    # IS the gram's distinct-source reach. The distinct runs ON TOP of
-    # the one gram exchange (hashpartitioning(gram) clusters every
-    # (source, gram) duplicate into one partition — subset clustering,
-    # no second exchange) and the result is PERSISTED with that
-    # partitioning (see the plan note on ngram_jaccard_pairs); the
-    # round-5 plan duplicated the whole scan+explode+distinct subtree
-    # 8x (plans/r06/source_ngram_overlap_before.txt).
+    # distinct collapses same-source repeats so a gram's posting count
+    # IS its distinct-source reach. The distinct runs ON TOP of the one
+    # gram exchange (hashpartitioning(gram) clusters every (source,
+    # gram) duplicate into one partition — subset clustering, no second
+    # exchange) and is persisted with that partitioning.
     sg = track(
-        docs.select("source", F.explode(_ngrams_col(n)).alias("gram"))
+        ensure_scan_parallelism(documents)
+        .select("source", F.explode(_ngrams_col(n)).alias("gram"))
         .repartition("gram")
         .distinct()
     )
-    grams = _drop_hot_keys(sg, "gram", max_sources)
-    sizes = grams.groupBy("source").agg(F.count(F.lit(1)).alias("sz"))
-    g1 = grams.select(F.col("source").alias("source_a"), "gram")
-    g2 = grams.select(F.col("source").alias("source_b"), "gram")
-    shared = (
-        g1.join(g2, "gram")
-        .filter(F.col("source_a") < F.col("source_b"))
-        .groupBy("source_a", "source_b")
-        .agg(F.count(F.lit(1)).alias("n_shared_grams"))
+    jaccard = F.col("n_shared").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_shared")
     )
-    out = (
-        shared.join(
-            sizes.select(
-                F.col("source").alias("source_a"), F.col("sz").alias("n_grams_a")
-            ),
-            "source_a",
-        )
-        .join(
-            sizes.select(
-                F.col("source").alias("source_b"), F.col("sz").alias("n_grams_b")
-            ),
-            "source_b",
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_shared_grams").cast("double")
-            / (F.col("n_grams_a") + F.col("n_grams_b") - F.col("n_shared_grams")),
-        )
-    )
-    return out.select(
-        "source_a",
-        "source_b",
-        F.col("n_shared_grams").cast("long").alias("n_shared_grams"),
-        F.col("n_grams_a").cast("long").alias("n_grams_a"),
-        F.col("n_grams_b").cast("long").alias("n_grams_b"),
-        "jaccard",
+    return _shared_key_pairs(sg, "source", "gram", max_sources).select(
+        F.col("a").alias("source_a"),
+        F.col("b").alias("source_b"),
+        F.col("n_shared").cast("long").alias("n_shared_grams"),
+        F.col("n_a").cast("long").alias("n_grams_a"),
+        F.col("n_b").cast("long").alias("n_grams_b"),
+        jaccard.alias("jaccard"),
     )
 
 
@@ -390,8 +391,8 @@ def decontaminate(
     # bench-gram distinct (subset clustering), the hot-df aggregate and
     # the probe join all derive from the one cache (the round-5 plan
     # re-ran the scan+explode 5x,
-    # plans/r06/decontaminate_before.txt; see the plan note on
-    # ngram_jaccard_pairs for the partitioning rationale).
+    # plans/r06/decontaminate_before.txt; see the plan contract on
+    # _shared_key_pairs for the partitioning rationale).
     grams = track(
         docs.select(
             "doc_id", is_bench.alias("is_bench"),
@@ -2263,15 +2264,13 @@ def winnow_dup_pairs(
     natural score: a page fully embedded in a larger page scores 1.0
     up to selection noise).
 
-    Scale shape (100 TB lens): identical to the capped inverted-index
-    join of :func:`ngram_jaccard_pairs`, but over the ~2/(w+1)-density
-    winnowed postings instead of ALL grams — the same pair signal for
-    shared runs >= w+k-1 tokens at a fraction of the exchange bytes.
-    A fingerprint selected by > ``max_df`` docs (boilerplate) is
-    dropped from the numerator AND both denominators (df from a
-    map-side-combined aggregate, hot set broadcast), bounding join work
-    at O(n_fps x max_df^2 / 2). The SQL oracle applies the identical
-    cap, so parity holds at every scale.
+    Scale shape (100 TB lens): the capped shared-key self-join of
+    :func:`ngram_jaccard_pairs` (:func:`_shared_key_pairs`), but over
+    the ~2/(w+1)-density winnowed postings instead of ALL grams — the
+    same pair signal for shared runs >= w+k-1 tokens at a fraction of
+    the exchange bytes. A fingerprint selected by > ``max_df`` docs
+    (boilerplate) is dropped from the numerator AND both denominators;
+    the SQL oracle applies the identical cap.
     """
     from .text import winnow_doc_fps
 
@@ -2281,38 +2280,18 @@ def winnow_dup_pairs(
     # guard-free so their zero-shuffle plans hold for callers that
     # control their own partitioning). winnow_doc_fps dedupes (doc, fp)
     # INSIDE the row, so no corpus-wide distinct exchange is needed.
-    # ONE winnow pass + fp-exchange, PERSISTED hash-partitioned on fp
-    # (the per-window argmin is the expensive map stage here — the
-    # round-5 plan re-ran it 8x, once per differently-pruned consumer
-    # subtree, plans/r06/winnow_dup_pairs_before.txt); see the plan
-    # note on ngram_jaccard_pairs for the partitioning rationale.
+    # ONE winnow pass + fp-exchange, persisted and fp-partitioned per
+    # the :func:`_shared_key_pairs` plan contract.
     fps = track(
         winnow_doc_fps(ensure_scan_parallelism(documents), k=k, w=w)
         .repartition("fp")
     )
-    kept = _drop_hot_keys(fps, "fp", max_df)
-    sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
-    p1 = kept.select(F.col("doc_id").alias("doc_a"), "fp")
-    p2 = kept.select(F.col("doc_id").alias("doc_b"), "fp")
-    shared = (
-        p1.join(p2, "fp")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
     return (
-        shared.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("n_a")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("n_b")),
-            "doc_b",
-        )
+        _shared_key_pairs(fps, "doc_id", "fp", max_df)
+        .filter(F.col("n_shared") >= min_shared)
         .select(
-            F.col("doc_a").cast("long"),
-            F.col("doc_b").cast("long"),
+            F.col("a").cast("long").alias("doc_a"),
+            F.col("b").cast("long").alias("doc_b"),
             F.col("n_shared").cast("long"),
             F.col("n_a").cast("long"),
             F.col("n_b").cast("long"),
@@ -2382,17 +2361,10 @@ def winnow_dup_clusters(
     the edge threshold, hash-min label propagation with pointer jumping
     above it; nodes-universe join restores singletons distributively.
     """
-    from ..cluster import connected_components
-
     pairs = winnow_dup_pairs(
         documents, k=k, w=w, min_shared=min_shared, max_df=max_df
     )
-    nodes = documents.select("doc_id")
-    out = connected_components(pairs, nodes, id_a="doc_a", id_b="doc_b")
-    return out.select(
-        F.col("url").cast("long").alias("doc_id"),
-        F.col("cluster_id").cast("long").alias("cluster_id"),
-    )
+    return _dup_clusters(pairs, documents)
 
 
 def _cc_recursive_sql(pairs_sql: str, a: str, b: str) -> str:
@@ -2442,17 +2414,10 @@ def ngram_dup_clusters(
     :func:`ngram_jaccard_pairs` edge set (exact n-gram Jaccard above
     threshold), labels = min doc_id; second driver-checkable CC family
     (see :func:`winnow_dup_clusters`)."""
-    from ..cluster import connected_components
-
     pairs = ngram_jaccard_pairs(
         documents, n=n, threshold=threshold, max_df=max_df
     )
-    nodes = documents.select("doc_id")
-    out = connected_components(pairs, nodes, id_a="doc_a", id_b="doc_b")
-    return out.select(
-        F.col("url").cast("long").alias("doc_id"),
-        F.col("cluster_id").cast("long").alias("cluster_id"),
-    )
+    return _dup_clusters(pairs, documents)
 
 
 def ngram_dup_clusters_sql(
@@ -2486,8 +2451,6 @@ def simhash_dup_clusters(
     A 10^8-mirror boilerplate page therefore costs 10^8 edges (linear),
     not 10^16 (quadratic), before the same hybrid CC as the flagship.
     """
-    from ..cluster import connected_components
-
     # ONE tracked fingerprint pass shared by the banded cross-pair join
     # AND the mirror-star reps/members below — previously the untracked
     # second simhash(documents) re-ran the per-doc token-hash fold ~3
@@ -2507,14 +2470,7 @@ def simhash_dup_clusters(
         .filter(F.col("rep") != F.col("doc_id"))
         .select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b"))
     )
-    nodes = documents.select("doc_id")
-    out = connected_components(
-        cross.unionByName(stars), nodes, id_a="doc_a", id_b="doc_b"
-    )
-    return out.select(
-        F.col("url").cast("long").alias("doc_id"),
-        F.col("cluster_id").cast("long").alias("cluster_id"),
-    )
+    return _dup_clusters(cross.unionByName(stars), documents)
 
 
 def simhash_dup_clusters_sql(k: int = 3) -> str:

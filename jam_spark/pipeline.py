@@ -154,13 +154,11 @@ def pairs_stage(sketches: DataFrame, params: SketchParams) -> DataFrame:
     return remap_pairs(pairs_n, sk.select("nid", "url"))
 
 
-def cluster_stage(
-    pairs: DataFrame, membership: DataFrame, max_iter: int = 50
-) -> DataFrame:
+def cluster_stage(pairs: DataFrame, membership: DataFrame) -> DataFrame:
     """Verified pairs (over reps) + exact membership → (url, cluster_id)
     for every input row. cluster_id = min url in the merged component."""
     rep_nodes = membership.select(F.col("rep_url").alias("url")).distinct()
-    rep_clusters = connected_components(pairs, rep_nodes, max_iter=max_iter)
+    rep_clusters = connected_components(pairs, rep_nodes)
     return (
         membership.join(
             rep_clusters.withColumnRenamed("url", "rep_url"), "rep_url"

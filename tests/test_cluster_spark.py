@@ -102,9 +102,7 @@ def test_distributed_cc_chain_converges_logarithmically(spark):
     )
     labels = {
         r["url"]: r["cluster_id"]
-        for r in C.connected_components(
-            edges, driver_threshold=0, max_iter=50
-        ).collect()
+        for r in C.connected_components(edges, driver_threshold=0).collect()
     }
     assert len(labels) == n
     assert set(labels.values()) == {"u0000"}

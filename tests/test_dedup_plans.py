@@ -3,11 +3,14 @@
 - exact_dedup_members must be an AQE-splittable join, not a window over
   the text fingerprint (a hot fingerprint = one straggler task at scale);
 - the substring_dup_spans DuckDB oracle must not truncate long docs (the
-  old oracle hardcoded a 20k-token unnest bound).
+  old oracle hardcoded a 20k-token unnest bound);
+- the shared-key pair queries persist their postings once and apply the
+  hot-key cap at exactly ``max_df``, like their DuckDB twins.
 """
 
 import duckdb
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -105,6 +108,7 @@ def test_gram_postings_materialized_once(spark):
     from jam_spark.ops.dedup import (
         decontaminate,
         ngram_jaccard_pairs,
+        source_ngram_overlap,
         winnow_dup_pairs,
     )
 
@@ -117,11 +121,17 @@ def test_gram_postings_materialized_once(spark):
                     f"iota kappa lambda mu nu xi omicron pi rho{i % 5}"
                     for i in range(40)
                 ],
+                "source": [f"src{i % 4}" for i in range(40)],
             }
         )
     )
     try:
-        for fn in (ngram_jaccard_pairs, winnow_dup_pairs, decontaminate):
+        for fn in (
+            ngram_jaccard_pairs,
+            source_ngram_overlap,
+            winnow_dup_pairs,
+            decontaminate,
+        ):
             plan = fn(docs)._jdf.queryExecution().executedPlan().toString()
             assert "InMemoryTableScan" in plan, plan
             # every explode lives inside the cached plan: the first
@@ -133,3 +143,48 @@ def test_gram_postings_materialized_once(spark):
                 ), f"{fn.__name__}: explode re-planned outside the cache"
     finally:
         release_all()
+
+
+#: each pair query with parameters that make its posting key one
+#: distinct 3-token window (winnow with w=1 selects every 3-gram hash)
+_CAP = 2
+_PAIR_QUERIES = {
+    "ngram_jaccard_pairs": dict(n=3, threshold=0.0, max_df=_CAP),
+    "source_ngram_overlap": dict(n=3, max_sources=_CAP),
+    "winnow_dup_pairs": dict(k=3, w=1, min_shared=1, max_df=_CAP),
+}
+
+
+@pytest.mark.parametrize("query", sorted(_PAIR_QUERIES))
+def test_shared_key_cap_boundary(spark, query):
+    """The hot-key cap of the shared-key self-join at its edge: a key
+    held by exactly ``max_df`` owners is kept, one held by ``max_df + 1``
+    owners is dropped from the shared count AND both sizes — in Spark
+    and in the DuckDB twin alike.
+
+    Owners 1 and 2 both hold the key K (``max_df`` owners) and the key H
+    (with owner 3: ``max_df + 1`` owners); every other 3-token window
+    contains a token of its own document, so it is unique. Each owner
+    holds 6 keys, so the pair (1, 2) must read 1 shared key and sizes
+    5 and 5, and owner 3, which shares only H, must be in no pair."""
+    from jam_spark.ops import dedup
+
+    kwargs = _PAIR_QUERIES[query]
+    docs = pd.DataFrame(
+        {
+            "doc_id": [1, 2, 3],
+            "text": [
+                "k1 k2 k3 a1 h1 h2 h3 a2",
+                "k1 k2 k3 b1 h1 h2 h3 b2",
+                "c1 c2 c3 c4 h1 h2 h3 c5",
+            ],
+            "source": [1, 2, 3],
+        }
+    )
+
+    def run(d):
+        return getattr(dedup, query)(d, **kwargs)
+
+    rows = run(spark.createDataFrame(docs)).collect()
+    assert [tuple(r)[:5] for r in rows] == [(1, 2, 1, 5, 5)], rows
+    _parity(spark, docs, run, getattr(dedup, f"{query}_sql")(**kwargs), [])

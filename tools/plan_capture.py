@@ -55,6 +55,7 @@ def main() -> None:
         "mix_report": lambda: dedup.mix_report(docs),
         "winnow_dup_pairs": lambda: dedup.winnow_dup_pairs(docs),
         "winnow_dup_clusters": lambda: dedup.winnow_dup_clusters(docs),
+        "ngram_dup_clusters": lambda: dedup.ngram_dup_clusters(docs),
         "shard_manifest": lambda: dedup.shard_manifest(docs),
         "minhash_sketches": lambda: dedup.minhash_sketches(docs),
         "minhash_pairs": lambda: dedup.minhash_pairs(docs),
