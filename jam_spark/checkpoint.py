@@ -365,7 +365,7 @@ class CheckpointedDedup:
         not the nid alone, because a driver that died mid job-commit can
         leave only SOME of a nid's rows behind. The clean path skips
         that read of the whole table (measured: ~30% of the bands-append
-        wall at 1M docs / 10% delta, tools/incremental_bench.py)."""
+        wall at 1M docs / 10% delta, BENCH/BASELINE.md)."""
         progress = self._progress()
         self._save(stage)
         if not self._done(stage):
@@ -385,6 +385,7 @@ class CheckpointedDedup:
     # ----------------------------------------------------------- stages
     def run_sketches(self, pages: DataFrame) -> tuple[DataFrame, DataFrame]:
         if self._done("sketches") and self._done("membership"):
+            t0 = time.time()
             existing = self._read("sketches")
             membership = self._read("membership")
             progress = self._progress()
@@ -446,11 +447,12 @@ class CheckpointedDedup:
                 )
             )
             self._save("sketches")
-            self.store.append(
+            self._append(
                 truly_new.withColumn("batch", F.lit(epoch).cast("long")),
                 "sketches",
+                t0,
             )
-            self.store.append(mem_adj, "membership")
+            self._append(mem_adj, "membership", t0)
             self._save("sketches", epoch)
             sk_new.unpersist()
             return self._read("sketches"), self._read("membership")

@@ -35,6 +35,7 @@ from ..pairs import cap_hot_keys
 from ..params import SketchParams
 from ..pipeline import dedup_pipeline, pairs_stage, sketch_stage
 from ..scan import ensure_scan_parallelism
+from ..sketch import token_windows
 from .text import _TOKENS, _tokens_col
 
 
@@ -179,17 +180,10 @@ def exact_dedup_members_sql() -> str:
 # ------------------------------------------------------- n-gram jaccard
 
 def _ngrams_col(n: int = 3):
-    toks = _tokens_col()
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(toks, i + j) for j in range(n)]
-        ),
+    gram = lambda t, i: F.concat_ws(  # noqa: E731
+        " ", *[F.element_at(t, i + j) for j in range(n)]
     )
-    # guard: sequence(1, x) with x < 1 would generate a DESCENDING ramp
-    return F.when(
-        F.size(toks) >= n, F.array_distinct(grams)
-    ).otherwise(F.array().cast("array<string>"))
+    return F.array_distinct(token_windows(_tokens_col(), n, gram))
 
 
 def ngram_jaccard_pairs(
@@ -632,21 +626,13 @@ def substring_dup_spans(
     Output: (doc_id, span_start, span_end, n_windows) with token-index
     [span_start, span_end) spans.
     """
-    toks = _tokens_col()
-    grams = F.when(
-        F.size(toks) >= window,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (window - 1)),
-            lambda i: F.struct(
-                (i - 1).alias("pos"),
-                F.md5(
-                    F.concat_ws(
-                        " ", F.slice(toks, i, window)
-                    )
-                ).alias("fp"),
-            ),
+    grams = token_windows(
+        _tokens_col(), window,
+        lambda t, i: F.struct(
+            (i - 1).alias("pos"),
+            F.md5(F.concat_ws(" ", F.slice(t, i, window))).alias("fp"),
         ),
-    ).otherwise(F.array().cast("array<struct<pos:int,fp:string>>"))
+    )
     pos_fp = documents.select(
         "doc_id", F.explode(grams).alias("g")
     ).select("doc_id", F.col("g.pos").alias("pos"), F.col("g.fp").alias("fp"))
@@ -690,13 +676,15 @@ def substring_dup_spans(
 
 
 def substring_dup_spans_sql(window: int = 20) -> str:
+    # the window joined token by token: a DuckDB list slice takes time
+    # linear in the whole list, which made the twin O(len^2) per doc
+    gram_expr = " || ' ' || ".join(f"t[u.i + {j}]" for j in range(window))
     return f"""
         WITH toks AS (
           SELECT doc_id, {_TOKENS} AS t FROM documents
         ),
         pos_fp AS (
-          SELECT doc_id, u.i - 1 AS pos,
-                 md5(array_to_string(t[u.i : u.i + {window} - 1], ' ')) AS fp
+          SELECT doc_id, u.i - 1 AS pos, md5({gram_expr}) AS fp
           FROM toks,
                -- bound derived from each doc's own length (a fixed bound
                -- would silently truncate long docs in the oracle only)

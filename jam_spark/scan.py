@@ -80,13 +80,19 @@ def _estimate_scan_splits(df: DataFrame) -> int | None:
     return max(len(files), -(-total // max_bytes))
 
 
+#: more input files than this and the serial driver-side footer scan
+#: gives way to the count() job
+MAX_FOOTER_FILES = 1000
+
+
 def metadata_row_count(df: DataFrame) -> int | None:
     """Exact row count from parquet footers — driver-side, no Spark job.
 
     Only answers when ``df`` is a BARE file-scan relation (its analyzed
     plan is the relation node itself — no filter/project/limit that
-    could change cardinality) over locally stat-able ``.parquet`` files;
-    returns None otherwise and callers fall back to ``df.count()``.
+    could change cardinality) over at most :data:`MAX_FOOTER_FILES`
+    locally stat-able ``.parquet`` files; returns None otherwise and
+    callers fall back to ``df.count()``.
     For a bare scan the footer row count is exactly what ``count()``
     computes, so auto-sizing decisions built on it are unchanged — this
     just removes the per-entry count JOB the ANN paths paid since r2.
@@ -100,7 +106,7 @@ def metadata_row_count(df: DataFrame) -> int | None:
         files = df.inputFiles()
     except Exception:
         return None
-    if not files:
+    if not files or len(files) > MAX_FOOTER_FILES:
         return None
     total = 0
     try:

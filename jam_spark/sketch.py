@@ -323,6 +323,25 @@ def make_sketch_udf(params: SketchParams):
     return F.pandas_udf(_sketch, T.ArrayType(T.LongType()))
 
 
+def token_windows(tokens, n: int, fn):
+    """``fn(t, i)`` for every full ``n``-token window of the array column
+    ``tokens``: ``t`` is the token array, bound once per row as the
+    variable of a single-element ``transform``, and ``i`` the window's
+    1-based start. Placed inline in the window lambda, the tokenizer (a
+    regex split of the whole text) would run again for every window:
+    O(len^2) per row. The window count is clamped at 0, so fewer than
+    ``n`` tokens (or null) give an empty array of ``fn``'s type."""
+    from pyspark.sql import functions as F
+
+    def _windows(t):
+        n_windows = F.greatest(F.size(t) - (n - 1), F.lit(0))
+        return F.transform(
+            F.array_repeat(F.lit(0), n_windows), lambda _, i: fn(t, i + 1)
+        )
+
+    return F.get(F.transform(F.array(tokens), _windows), 0)
+
+
 def jvm_sketch_col(params: SketchParams, text_col: str = "text"):
     """JVM-native sketch expression (algo='xxh64'): the whole
     tokenize → shingle → hash → FracMinHash → distinct/sort/bottom-nmax
@@ -349,12 +368,6 @@ def jvm_sketch_col(params: SketchParams, text_col: str = "text"):
         keep_fn = lambda h: h >= 0  # noqa: E731
     else:
         keep_fn = lambda h: (h >= 0) & (h < F.lit(max_hash))  # noqa: E731
-    # IMPORTANT: the token array must be a bound lambda variable, not an
-    # inline subexpression — Catalyst inlines unaliased subtrees into
-    # every lambda element, re-running split() per WINDOW and turning the
-    # stage O(len^2). One enclosing transform gives `t` a single
-    # evaluation per row.
-    #
     # Whitespace class: Java's \s is ASCII-only; Python's str.split()
     # (the oracle's tokenizer) splits on the Unicode White_Space property
     # PLUS the four ASCII separator controls 1C-1F. The regex matches
@@ -365,26 +378,15 @@ def jvm_sketch_col(params: SketchParams, text_col: str = "text"):
         F.split(F.lower(F.col(text_col)), r"[\p{IsWhite_Space}\x1c-\x1f]+"),
         lambda t: t != "",
     )
-
-    def _sketch_over(t):
-        # xxhash64 over the k tokens directly: Spark chains the seed
-        # through the arguments (h = xxh64(tok_i, seed=h)), so no gram
-        # string or slice array is materialized per window. The oracle
-        # mirrors the chaining exactly.
-        grams = F.transform(
-            F.sequence(F.lit(1), F.size(t) - (params.k - 1)),
-            lambda i: F.xxhash64(
-                *[F.element_at(t, i + j) for j in range(params.k)]
-            ),
-        )
-        grams = F.when(F.size(t) >= params.k, grams).otherwise(
-            F.array().cast("array<long>")
-        )
-        kept = F.filter(grams, keep_fn)
-        sketch = F.array_sort(F.array_distinct(kept))
-        if params.nmax is not None:
-            sketch = F.slice(sketch, 1, params.nmax)
-        return sketch
-
-    # bind toks once via a single-element transform, then flatten
-    return F.get(F.transform(F.array(toks), _sketch_over), 0)
+    # xxhash64 over the k tokens directly: Spark chains the seed through
+    # the arguments (h = xxh64(tok_i, seed=h)), so no gram string or
+    # slice array is materialized per window. The oracle mirrors the
+    # chaining exactly.
+    grams = token_windows(
+        toks, params.k,
+        lambda t, i: F.xxhash64(*[F.element_at(t, i + j) for j in range(params.k)]),
+    )
+    sketch = F.array_sort(F.array_distinct(F.filter(grams, keep_fn)))
+    if params.nmax is not None:
+        sketch = F.slice(sketch, 1, params.nmax)
+    return sketch

@@ -5,7 +5,9 @@
 - the substring_dup_spans DuckDB oracle must not truncate long docs (the
   old oracle hardcoded a 20k-token unnest bound);
 - the shared-key pair queries persist their postings once and apply the
-  hot-key cap at exactly ``max_df``, like their DuckDB twins.
+  hot-key cap at exactly ``max_df``, like their DuckDB twins;
+- every token-window query splits the text once per row, outside any
+  lambda body, and agrees with its oracle on one giant document.
 """
 
 import duckdb
@@ -37,6 +39,7 @@ def _parity(spark, docs_pdf, spark_fn, sql, sort_cols):
     srows = sorted(tuple(r) for r in sdf.collect())
     drows = sorted(tuple(r[i] for i in idx) for r in rel.fetchall())
     assert srows == drows
+    return srows
 
 
 def test_substring_oracle_handles_long_docs(spark):
@@ -188,3 +191,139 @@ def test_shared_key_cap_boundary(spark, query):
     rows = run(spark.createDataFrame(docs)).collect()
     assert [tuple(r)[:5] for r in rows] == [(1, 2, 1, 5, 5)], rows
     _parity(spark, docs, run, getattr(dedup, f"{query}_sql")(**kwargs), [])
+
+
+def _split_sites(df):
+    """(splits, splits inside a lambda body) of every node of ``df``'s
+    optimized plan, the plans of cached relations included."""
+    sites = []
+
+    def count(e, in_lambda, acc):
+        name = e.getClass().getSimpleName()
+        if name == "StringSplit":
+            acc[0] += 1
+            acc[1] += in_lambda
+        kids = e.children()
+        for k in range(kids.size()):
+            count(kids.apply(k), in_lambda or name == "LambdaFunction", acc)
+
+    def walk(node):
+        acc = [0, 0]
+        exprs = node.expressions()
+        for k in range(exprs.size()):
+            count(exprs.apply(k), False, acc)
+        sites.append(tuple(acc))
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            walk(node.executedPlan())
+        for kids in (node.children(), node.innerChildren()):
+            for k in range(kids.size()):
+                walk(kids.apply(k))
+
+    walk(df._jdf.queryExecution().optimizedPlan())
+    return sites
+
+
+def _jvm_sketch_projection(documents):
+    from jam_spark.params import SketchParams
+    from jam_spark.sketch import jvm_sketch_col
+
+    return documents.select(
+        "doc_id", jvm_sketch_col(SketchParams(algo="xxh64")).alias("sketch")
+    )
+
+
+def _token_window_query(name):
+    from jam_spark.ops import dedup, text
+
+    if name == "jvm_sketch_col":
+        return _jvm_sketch_projection
+    # winnow binds its tokens through a Project of its own (SQL string
+    # expressions over the ``toks`` column)
+    return getattr(text if name == "winnow_doc_fps" else dedup, name)
+
+
+@pytest.mark.parametrize(
+    "query",
+    [
+        "ngram_jaccard_pairs",
+        "source_ngram_overlap",
+        "decontaminate",
+        "substring_dup_spans",
+        "jvm_sketch_col",
+        "winnow_doc_fps",
+    ],
+)
+def test_text_split_once_per_row(spark, tmp_path, query):
+    """The token array of every window query is bound once per row: each
+    plan node evaluates at most one text split, and none inside a lambda
+    body, where it would run again for every window (O(len^2) per doc).
+    The input is parquet-backed so the projections stay in the plan (a
+    local relation can be folded away before it is planned)."""
+    from jam_spark._persist import release_all
+
+    path = str(tmp_path / "docs.parquet")
+    spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [1, 2, 3],
+                "text": [
+                    "a b c d e f g h",
+                    "a b c d e f g x",
+                    "p q r s t u v w",
+                ],
+                "source": ["s1", "s2", "s3"],
+            }
+        )
+    ).write.parquet(path)
+    docs = spark.read.parquet(path)
+    try:
+        sites = _split_sites(_token_window_query(query)(docs))
+    finally:
+        release_all()
+    assert sum(n for n, _ in sites) >= 1, "no text split found in the plan"
+    assert all(n <= 1 for n, _ in sites), sites
+    assert all(inside == 0 for _, inside in sites), sites
+
+
+def _giant_docs():
+    """One 21,000-token document (id 1, source a) and a near-copy of it
+    (id 3, source b): doc 3 is in decontaminate's default benchmark
+    slice (3 % 97 == 3), and the two share nearly every gram, so every
+    window query returns rows."""
+    dup_block = " ".join(f"dup{i}" for i in range(25))
+    filler = " ".join(f"w{i}" for i in range(21000))
+    return pd.DataFrame(
+        {
+            "doc_id": [1, 3],
+            "text": [f"{dup_block} {filler} {dup_block}", f"{filler} tail"],
+            "source": ["a", "b"],
+        }
+    )
+
+
+@pytest.mark.parametrize(
+    "query", ["ngram_jaccard_pairs", "source_ngram_overlap", "decontaminate"]
+)
+def test_giant_document_matches_duckdb(spark, query):
+    """The one-giant-document row of the hostile-input matrix for the
+    n-gram queries: identical rows in Spark and the DuckDB twin."""
+    from jam_spark.ops import dedup
+
+    docs = _giant_docs()
+    sql = getattr(dedup, f"{query}_sql")()
+    assert _parity(spark, docs, getattr(dedup, query), sql, [])
+
+
+def test_giant_document_jvm_sketch_matches_oracle(spark):
+    from jam_spark import oracle as O
+    from jam_spark.params import SketchParams
+
+    params = SketchParams(algo="xxh64")
+    docs = _giant_docs()
+    got = {
+        r["doc_id"]: [h & (2**64 - 1) for h in r["sketch"]]
+        for r in _jvm_sketch_projection(spark.createDataFrame(docs)).collect()
+    }
+    for doc_id, text in zip(docs["doc_id"], docs["text"]):
+        want = O.sketch_text(text, params).hashes
+        assert want and got[doc_id] == want, doc_id

@@ -266,6 +266,11 @@ def test_incremental_append_reuses_bands_and_pairs(spark, tmp_path):
         for l in open(os.path.join(root, "metrics", "pairs.jsonl"))
     ]
     assert [bool(m.get("append")) for m in pair_metrics] == [False, True]
+    # the sketch and membership appends leave the same lineage
+    for stage in ("sketches", "membership"):
+        with open(os.path.join(root, "metrics", f"{stage}.jsonl")) as f:
+            rows = [_json.loads(l) for l in f]
+        assert [bool(m.get("append")) for m in rows] == [False, True], stage
     pairs = spark.read.parquet(os.path.join(root, "pairs"))
     assert set(r["batch"] for r in pairs.select("batch").distinct().collect()) <= {0, 1}
 

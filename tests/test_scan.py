@@ -110,3 +110,20 @@ def test_metadata_row_count_bare_scan_only(spark, tmp_path):
     mem = spark.createDataFrame([(1,), (2,)], "x long")
     assert metadata_row_count(mem) is None
     assert exact_count(mem) == 2
+
+
+def test_metadata_row_count_caps_footer_scan(spark, tmp_path, monkeypatch):
+    """Above MAX_FOOTER_FILES input files the footers are not opened
+    (they are read serially on the driver) and exact_count falls back to
+    count()."""
+    from jam_spark import scan
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(0, 300, numPartitions=3).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert len(df.inputFiles()) == 3
+    monkeypatch.setattr(scan, "MAX_FOOTER_FILES", 3)
+    assert scan.metadata_row_count(df) == 300
+    monkeypatch.setattr(scan, "MAX_FOOTER_FILES", 2)
+    assert scan.metadata_row_count(df) is None
+    assert scan.exact_count(df) == 300
