@@ -16,8 +16,12 @@ Parquet layout:
       progress.json          the one progress record (epochs, open windows)
       sketches/  membership/  bands/  pairs/  clusters/   (stage tables)
       clusters_base/         the previous labels, base of incremental CC
-      metrics/<stage>.jsonl  per-stage row counts, per-partition rows,
-                             wall_ms, completion marker
+      metrics/<stage>.jsonl  one record per write or append: rows, rows
+                             per part file it added, append marker, wall_ms
+
+Lineage costs no Spark job: a store's ``put`` takes the rows of each
+data file a write added from file metadata, and parquet tables are read
+with the schema in their footers (no schema-inference job).
 
 Resume contract:
 - a stage directory with Spark's ``_SUCCESS`` marker AND matching
@@ -75,14 +79,18 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .cluster import connected_components
 from .params import SketchParams
 from .pipeline import sketch_stage
+from .scan import parquet_footer
 
 #: stage → a column its current table carries (the epoch stamp; the
 #: packed band key). A table without it was written by older code.
 _CURRENT_LAYOUT = {"sketches": "batch", "bands": "bkey", "pairs": "batch"}
+#: the footer key under which Spark stores a parquet file's Spark schema
+_SPARK_SCHEMA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
@@ -136,15 +144,34 @@ class _ParquetStore:
     def done(self, stage: str) -> bool:
         return os.path.exists(os.path.join(self.path(stage), "_SUCCESS"))
 
-    def write(self, df: DataFrame, stage: str) -> DataFrame:
-        df.write.mode("overwrite").parquet(self.path(stage))
-        return self.read(stage)
+    def _parts(self, stage: str) -> set[str]:
+        try:
+            return {f for f in os.listdir(self.path(stage)) if f.startswith("part-")}
+        except FileNotFoundError:
+            return set()
 
-    def append(self, df: DataFrame, stage: str) -> None:
-        df.write.mode("append").parquet(self.path(stage))
+    def put(self, df: DataFrame, stage: str, append: bool) -> list[tuple[int, int]]:
+        """Append ``df`` to the table or replace it; ``(partition id,
+        rows)`` of each ``part-NNNNN-...`` file the write added, from its
+        footer."""
+        path = self.path(stage)
+        before = self._parts(stage) if append else set()
+        df.write.mode("append" if append else "overwrite").parquet(path)
+        return [
+            (int(f.split("-")[1]), parquet_footer(os.path.join(path, f)).num_rows)
+            for f in sorted(self._parts(stage) - before)
+        ]
 
     def read(self, stage: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(stage))
+        reader = self.spark.read
+        parts = sorted(self._parts(stage))
+        if parts:
+            # read with the Spark schema the writer kept in the footer:
+            # without it the read runs a schema-inference job
+            meta = parquet_footer(os.path.join(self.path(stage), parts[0])).metadata
+            schema = json.loads(meta[_SPARK_SCHEMA])
+            reader = reader.schema(T.StructType.fromJson(schema))
+        return reader.parquet(self.path(stage))
 
     def invalidate(self, stage: str) -> None:
         import shutil
@@ -174,17 +201,23 @@ class _IcebergStore:
     def done(self, stage: str) -> bool:
         return self.spark.catalog.tableExists(self.tbl(stage))
 
-    def write(self, df: DataFrame, stage: str) -> DataFrame:
-        (
-            df.writeTo(self.tbl(stage))
-            .using("iceberg")
-            .tableProperty("jam.params", self.params_json)
-            .createOrReplace()
-        )
-        return self.read(stage)
-
-    def append(self, df: DataFrame, stage: str) -> None:
-        df.writeTo(self.tbl(stage)).append()
+    def put(self, df: DataFrame, stage: str, append: bool) -> list[tuple[int, int]]:
+        """Append ``df`` to the table or replace it; ``(partition id,
+        rows)`` of each ``NNNNN-...`` data file the new snapshot added,
+        from the table's ``entries`` and ``snapshots`` metadata tables."""
+        tbl = self.tbl(stage)
+        if append:
+            df.writeTo(tbl).append()
+        else:
+            df.writeTo(tbl).using("iceberg").tableProperty(
+                "jam.params", self.params_json
+            ).createOrReplace()
+        added = self.spark.sql(
+            "SELECT data_file.file_path, data_file.record_count "
+            f"FROM {tbl}.entries WHERE status = 1 AND snapshot_id = "
+            f"(SELECT max_by(snapshot_id, committed_at) FROM {tbl}.snapshots)"
+        ).collect()
+        return [(int(os.path.basename(f).split("-")[0]), n) for f, n in added]
 
     def read(self, stage: str) -> DataFrame:
         return self.spark.read.table(self.tbl(stage))
@@ -275,44 +308,20 @@ class CheckpointedDedup:
                 + "\n"
             )
 
-    def _write(self, df: DataFrame, stage: str) -> DataFrame:
-        t0 = time.time()
-        out = self.store.write(df, stage)
-        per_part = [
-            {"partition_id": r["pid"], "rows": r["count"]}
-            for r in out.groupBy(F.spark_partition_id().alias("pid"))
-            .count()
-            .collect()
-        ]
-        total = sum(p["rows"] for p in per_part)
-        self._log(
-            stage,
-            {
-                "rows": total,
-                "partitions": per_part,
-                "wall_ms": int((time.time() - t0) * 1000),
-            },
-        )
-        return out
-
-    def _append(self, df: DataFrame, stage: str, t0: float) -> int:
-        """Append a delta to a completed stage table; metrics record the
-        APPENDED row count with an ``append`` marker, so lineage shows
-        an incremental run wrote O(delta) rows, not a rebuild."""
-        df = df.persist()
-        n = df.count()
-        if n:
-            self.store.append(df, stage)
-        self._log(
-            stage,
-            {
-                "rows": n,
-                "append": True,
-                "wall_ms": int((time.time() - t0) * 1000),
-            },
-        )
-        df.unpersist()
-        return n
+    def _put(
+        self, df: DataFrame, stage: str, t0: float, append: bool = False
+    ) -> DataFrame:
+        """The one writer of stage tables: append ``df`` or replace the
+        table with it, log the rows of each data file the write added
+        (file metadata: no Spark job), and return the table."""
+        files = self.store.put(df, stage, append)
+        self._log(stage, {
+            "rows": sum(rows for _, rows in files),
+            "partitions": [{"partition_id": p, "rows": n} for p, n in files],
+            "append": append,
+            "wall_ms": int((time.time() - t0) * 1000),
+        })
+        return self._read(stage)
 
     def _read(self, stage: str) -> DataFrame:
         df = self.store.read(stage)
@@ -353,49 +362,51 @@ class CheckpointedDedup:
         return rows if lo is None else rows.filter(F.col("batch") > lo)
 
     def _commit(
-        self, stage: str, delta: DataFrame, key_cols: list[str], t0: float
-    ) -> DataFrame:
-        """The append protocol of bands and pairs: open the stage's
-        window, write ``delta`` (the whole table on a fresh stage, an
-        append otherwise), then close the window recording the sketch
-        epoch the stage now covers. When a previous attempt may have
-        written part of this delta — its window was left open, or the
-        table exists without an epoch — the append is anti-joined
-        against the table on ``key_cols`` first: the FULL content key,
-        not the nid alone, because a driver that died mid job-commit can
-        leave only SOME of a nid's rows behind. The clean path skips
-        that read of the whole table (measured: ~30% of the bands-append
-        wall at 1M docs / 10% delta, BENCH/BASELINE.md)."""
+        self, stage: str, epoch: int, tables: dict, t0: float
+    ) -> list[DataFrame]:
+        """The append window of sketches, bands and pairs: open
+        ``stage``'s window, put each ``{table: (delta, key_cols)}`` (the
+        whole table when it does not exist yet, an append otherwise),
+        then close the window recording ``epoch`` as the one the stage
+        absorbed. When a previous attempt may have written part of a
+        delta — the window was left open, or the stage has no recorded
+        epoch — the append is anti-joined against the table on
+        ``key_cols`` first: the FULL content key, not the nid alone,
+        because a driver that died mid job-commit can leave only SOME of
+        a nid's rows behind. The clean path skips that read of the whole
+        table (measured: ~30% of the bands-append wall at 1M docs / 10%
+        delta, BENCH/BASELINE.md). Returns the tables, in order."""
         progress = self._progress()
+        retry = stage in progress["open"] or stage not in progress
         self._save(stage)
-        if not self._done(stage):
-            out = self._write(delta, stage)
-        else:
-            # read before appending: an older layout is refused untouched
-            table = self._read(stage)
-            if stage in progress["open"] or stage not in progress:
-                delta = delta.join(
-                    table.select(*key_cols), key_cols, "left_anti"
-                )
-            self._append(delta, stage, t0)
-            out = self._read(stage)
-        self._save(stage, progress["sketches"])
+        out = []
+        for name, (delta, key_cols) in tables.items():
+            append = self._done(name)
+            if append:
+                # read before appending: an older layout is refused untouched
+                table = self._read(name)
+                if retry:
+                    delta = delta.join(
+                        table.select(*key_cols), key_cols, "left_anti"
+                    )
+            out.append(self._put(delta, name, t0, append))
+        self._save(stage, epoch)
         return out
 
     # ----------------------------------------------------------- stages
     def run_sketches(self, pages: DataFrame) -> tuple[DataFrame, DataFrame]:
-        if self._done("sketches") and self._done("membership"):
-            t0 = time.time()
+        t0 = time.time()
+        progress = self._progress()
+        resume = self._done("sketches") and self._done("membership")
+        epoch = 0
+        if resume:
             existing = self._read("sketches")
             membership = self._read("membership")
-            progress = self._progress()
             # a retry after a crash reuses the epoch it was appending
             epoch = progress.get("sketches", -1) + 1
             # incremental resume: sketch only urls not seen yet
-            new_pages = pages.join(
-                membership.select("url"), "url", "left_anti"
-            )
-            if new_pages.limit(1).count() == 0:
+            pages = pages.join(membership.select("url"), "url", "left_anti")
+            if pages.limit(1).count() == 0:
                 if "sketches" in progress["open"]:
                     # the crashed attempt appended both tables
                     self._save("sketches", epoch)
@@ -409,67 +420,42 @@ class CheckpointedDedup:
             # clusters table computed over fewer pages than membership
             # holds.
             if self._done("clusters"):
-                self.store.write(self._read("clusters"), "clusters_base")
+                self.store.put(self._read("clusters"), "clusters_base", False)
                 self._save("clusters_base", progress["pairs"])
             self._invalidate("clusters")
-            sk_new, mem_new = sketch_stage(new_pages, self.params)
-            sk_new = sk_new.persist()
+        sk_new, mem_new = sketch_stage(pages, self.params)
+        # persist: both deltas below read it — without the cache, writing
+        # membership would re-run the whole scan+sketch+groupBy
+        sk_new = sk_new.persist()
+        sk_delta = sk_new
+        if resume:
             # cross-batch exact-dup collapse + crash idempotency, both
             # via the text fingerprint: a new page whose text was already
             # sketched in an earlier batch adds NO sketch row (its rows
             # would otherwise only re-merge through a similarity-100
             # pair — which never comes for sub-k-token texts or
             # cutoff >= 100), and a retry after a crash between the two
-            # appends re-derives an empty truly_new instead of
-            # duplicating sketch rows (the anti-join sees the rows the
-            # crashed attempt already appended).
-            truly_new = sk_new.join(
+            # appends re-derives an empty delta instead of duplicating
+            # sketch rows (the anti-join sees the rows the crashed
+            # attempt already appended).
+            sk_delta = sk_new.join(
                 existing.select("text_fp"), "text_fp", "left_anti"
             )
             # membership points at the EXISTING rep when the fp is known
-            mem_adj = (
-                mem_new.join(
-                    sk_new.select(
-                        F.col("url").alias("rep_url"), "text_fp"
-                    ),
-                    "rep_url",
-                )
-                .join(
-                    existing.select(
-                        "text_fp", F.col("url").alias("_old_rep")
-                    ),
-                    "text_fp",
-                    "left",
-                )
-                .select(
-                    "url",
-                    F.coalesce("_old_rep", "rep_url").alias("rep_url"),
-                )
+            rep_fp = sk_new.select(F.col("url").alias("rep_url"), "text_fp")
+            old_rep = existing.select("text_fp", F.col("url").alias("_old_rep"))
+            mem_new = (
+                mem_new.join(rep_fp, "rep_url")
+                .join(old_rep, "text_fp", "left")
+                .select("url", F.coalesce("_old_rep", "rep_url").alias("rep_url"))
             )
-            self._save("sketches")
-            self._append(
-                truly_new.withColumn("batch", F.lit(epoch).cast("long")),
-                "sketches",
-                t0,
-            )
-            self._append(mem_adj, "membership", t0)
-            self._save("sketches", epoch)
-            sk_new.unpersist()
-            return self._read("sketches"), self._read("membership")
-        sketches, membership = sketch_stage(pages, self.params)
-        # write sketches FIRST with a persist pinned: membership's rep
-        # side is a projection of this DataFrame, so its join then reads
-        # the cache — without this, writing membership would re-run the
-        # whole scan+sketch+groupBy a second time
-        sketches = sketches.persist()
-        self._save("sketches")
-        out_s = self._write(
-            sketches.withColumn("batch", F.lit(0).cast("long")), "sketches"
-        )
-        out_m = self._write(membership, "membership")
-        self._save("sketches", 0)
-        sketches.unpersist()
-        return out_s, out_m
+        batch = F.lit(epoch).cast("long")
+        sketches, membership = self._commit("sketches", epoch, {
+            "sketches": (sk_delta.withColumn("batch", batch), ["text_fp"]),
+            "membership": (mem_new, ["url"]),
+        }, t0)
+        sk_new.unpersist()
+        return sketches, membership
 
     def run_bands(self, sketches: DataFrame) -> DataFrame:
         """Materialize the banded postings table — the persisted analogue
@@ -510,9 +496,9 @@ class CheckpointedDedup:
             self.params,
             id_col="nid",
         )
-        return self._commit(
-            "bands", bands.sortWithinPartitions("bkey"), ["nid", "bkey"], t0
-        )
+        epoch = self._progress()["sketches"]
+        delta = bands.sortWithinPartitions("bkey")
+        return self._commit("bands", epoch, {"bands": (delta, ["nid", "bkey"])}, t0)[0]
 
     def run_pairs(self, sketches: DataFrame, bands: DataFrame) -> DataFrame:
         """Verified pairs; ``batch`` stamps each row with the sketch epoch
@@ -550,10 +536,11 @@ class CheckpointedDedup:
         else:
             cands = candidate_pairs(bands, id_col="nid")
         pairs_n = verify_pairs(cands, sk, self.params, id_col="nid")
+        epoch = self._progress()["sketches"]
         delta = remap_pairs(pairs_n, sk.select("nid", "url")).withColumn(
-            "batch", F.lit(self._progress()["sketches"]).cast("long")
+            "batch", F.lit(epoch).cast("long")
         )
-        return self._commit("pairs", delta, ["id_a", "id_b"], t0)
+        return self._commit("pairs", epoch, {"pairs": (delta, ["id_a", "id_b"])}, t0)[0]
 
     def run_clusters(self, pairs: DataFrame, membership: DataFrame) -> DataFrame:
         """Duplicate-cluster closure. Incremental: when a
@@ -564,6 +551,7 @@ class CheckpointedDedup:
         exactly, so output equals a from-scratch run."""
         if self._done("clusters"):
             return self._read("clusters")
+        t0 = time.time()
         edge_cols = [F.col("id_a"), F.col("id_b")]
         rep_nodes = membership.select(F.col("rep_url").alias("url")).distinct()
         # a crash between the snapshot write and its record leaves an
@@ -616,21 +604,14 @@ class CheckpointedDedup:
         clusters = clusters.join(label, "cluster_id").select(
             "url", F.col("_label").alias("cluster_id")
         )
-        return self._write(clusters, "clusters")
+        return self._put(clusters, "clusters", t0)
 
     # ------------------------------------------------------------ runs
-    def run(self, pages: DataFrame, stop_after: str | None = None) -> DataFrame:
-        """Run (or resume) the full pipeline. ``stop_after`` simulates a
-        mid-pipeline crash for resume tests."""
+    def run(self, pages: DataFrame) -> DataFrame:
+        """Run (or resume) the full pipeline."""
         sketches, membership = self.run_sketches(pages)
-        if stop_after == "sketches":
-            return sketches
         bands = self.run_bands(sketches)
-        if stop_after == "bands":
-            return bands
         pairs = self.run_pairs(sketches, bands)
-        if stop_after == "pairs":
-            return pairs
         return self.run_clusters(pairs, membership)
 
     def metrics(self) -> list[dict]:

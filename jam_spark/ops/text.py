@@ -835,13 +835,16 @@ def winnow_doc_fps(
 
 def winnow_fingerprints_sql(k: int = WINNOW_K, w: int = WINNOW_W) -> str:
     """DuckDB twin of :func:`winnow_fingerprints` (identical md5-hex
-    lexicographic selection, identical short-doc single-window rule)."""
+    lexicographic selection, identical short-doc single-window rule).
+    Grams and windows are built by element access: a DuckDB list slice
+    takes time linear in the whole list (O(len^2) per doc)."""
     kg, wg = k - 1, w - 1
-    mn = f"list_min(grams[j:least(j + {wg}, ng)])"
+    gram = " || ' ' || ".join(f"toks[i + {t}]" for t in range(k))
+    mn = f"list_min([grams[m] FOR m IN range(j, least(j + {wg}, ng) + 1)])"
     return f"""
         WITH t AS (SELECT doc_id, {_TOKENS} AS toks FROM documents),
         g AS (SELECT doc_id,
-                [md5(array_to_string(toks[i:i + {kg}], ' '))
+                [md5({gram})
                  FOR i IN range(1, greatest(len(toks) - {kg}, 0) + 1)] AS grams
               FROM t),
         s AS (SELECT doc_id, grams, len(grams) AS ng FROM g

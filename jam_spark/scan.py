@@ -110,8 +110,6 @@ def metadata_row_count(df: DataFrame) -> int | None:
         return None
     total = 0
     try:
-        import pyarrow.parquet as pq
-
         for f in files:
             parsed = urlparse(f)
             if parsed.scheme not in ("", "file"):
@@ -119,10 +117,18 @@ def metadata_row_count(df: DataFrame) -> int | None:
             path = parsed.path or f
             if not path.endswith(".parquet"):
                 return None
-            total += pq.ParquetFile(path).metadata.num_rows
+            total += parquet_footer(path).num_rows
     except Exception:
         return None
     return total
+
+
+def parquet_footer(path: str):
+    """The footer (``pyarrow`` ``FileMetaData``: row count, key-value
+    metadata) of a local parquet file, read driver-side — no Spark job."""
+    import pyarrow.parquet as pq
+
+    return pq.read_metadata(path)
 
 
 def exact_count(df: DataFrame) -> int:

@@ -43,9 +43,9 @@ from pyspark.sql import types as T
 from .checkpoint import CheckpointedDedup
 from .params import SketchParams
 
-#: file streams require an explicit schema (no inference at plan time);
-#: only the two columns the pipeline consumes — parquet column pruning
-#: drops the rest at the reader.
+#: the landing-zone contract: parquet page files. File streams require
+#: an explicit schema (no inference at plan time); only the two columns
+#: the pipeline consumes — parquet column pruning drops the rest.
 PAGES_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType()),
@@ -59,8 +59,6 @@ def stream_dedup_from_files(
     input_dir: str,
     root: str,
     params: SketchParams,
-    fmt: str = "parquet",
-    schema: T.StructType = PAGES_SCHEMA,
     max_files_per_trigger: int | None = None,
     checkpoint_dir: str | None = None,
     available_now: bool = True,
@@ -82,17 +80,17 @@ def stream_dedup_from_files(
         )
     ck = CheckpointedDedup(spark, root, params)
 
-    reader = spark.readStream.format(fmt).schema(schema)
+    reader = spark.readStream.schema(PAGES_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.load(input_dir).select("url", "text")
+    pages = reader.parquet(input_dir)
 
     def _ingest(batch_df, batch_id: int) -> None:
         # an empty replayed batch is a no-op; limit(1) keeps the probe
         # from scanning the batch twice
         if batch_df.limit(1).count() == 0:
             return
-        ck.run(batch_df.select("url", "text"))
+        ck.run(batch_df)
 
     writer = (
         pages.writeStream.foreachBatch(_ingest)

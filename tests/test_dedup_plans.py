@@ -302,11 +302,18 @@ def _giant_docs():
 
 
 @pytest.mark.parametrize(
-    "query", ["ngram_jaccard_pairs", "source_ngram_overlap", "decontaminate"]
+    "query",
+    [
+        "ngram_jaccard_pairs",
+        "source_ngram_overlap",
+        "decontaminate",
+        "winnow_dup_pairs",
+    ],
 )
 def test_giant_document_matches_duckdb(spark, query):
     """The one-giant-document row of the hostile-input matrix for the
-    n-gram queries: identical rows in Spark and the DuckDB twin."""
+    n-gram and winnow queries: identical rows in Spark and the DuckDB
+    twin."""
     from jam_spark.ops import dedup
 
     docs = _giant_docs()

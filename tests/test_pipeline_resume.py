@@ -31,7 +31,7 @@ def test_kill_after_sketches_then_resume(spark, small_pages, tmp_path):
 
     root = str(tmp_path / "ck1")
     ck = CheckpointedDedup(spark, root, params)
-    ck.run(small_pages, stop_after="sketches")  # "crash" mid-pipeline
+    ck.run_sketches(small_pages)  # "crash" mid-pipeline
     assert os.path.exists(os.path.join(root, "sketches", "_SUCCESS"))
     assert not os.path.exists(os.path.join(root, "pairs", "_SUCCESS"))
 
@@ -49,7 +49,9 @@ def test_kill_after_sketches_then_resume(spark, small_pages, tmp_path):
 def test_kill_after_pairs_then_resume(spark, small_pages, tmp_path):
     params = SketchParams()
     root = str(tmp_path / "ck2")
-    CheckpointedDedup(spark, root, params).run(small_pages, stop_after="pairs")
+    ck = CheckpointedDedup(spark, root, params)
+    sketches, _ = ck.run_sketches(small_pages)
+    ck.run_pairs(sketches, ck.run_bands(sketches))  # "crash" before clusters
     got = _clusters_dict(CheckpointedDedup(spark, root, params).run(small_pages))
     want = _clusters_dict(dedup_pipeline(small_pages, params))
     assert got == want
@@ -57,9 +59,7 @@ def test_kill_after_pairs_then_resume(spark, small_pages, tmp_path):
 
 def test_params_mismatch_refused(spark, small_pages, tmp_path):
     root = str(tmp_path / "ck3")
-    CheckpointedDedup(spark, root, SketchParams()).run(
-        small_pages, stop_after="sketches"
-    )
+    CheckpointedDedup(spark, root, SketchParams()).run_sketches(small_pages)
     with pytest.raises(ValueError):
         CheckpointedDedup(spark, root, SketchParams(k=7))
 
@@ -120,6 +120,77 @@ def test_metrics_lineage_recorded(spark, small_pages, tmp_path):
     st = ck.stats()
     assert st["n_pages"] == small_pages.count()
     assert st["n_clusters"] <= st["n_sketches"]
+
+
+def test_lineage_from_written_files(spark, tmp_path, monkeypatch):
+    """Every metrics record of a full build and of an append holds the
+    rows of each data file its write added, summing to its total; each
+    append's total is its table's growth; and neither the store write
+    nor the lineage logging counts, collects or persists a DataFrame."""
+    from jam_spark.checkpoint import _ParquetStore
+
+    params = SketchParams()
+    pages_all = spark.createDataFrame(
+        pages_to_pandas(generate_pages(n_docs=200, seed=11))
+    ).cache()
+    root = str(tmp_path / "ck_lineage")
+
+    writing = []
+
+    def during_write(fn):
+        def wrapped(*args, **kwargs):
+            writing.append(fn.__name__)
+            try:
+                return fn(*args, **kwargs)
+            finally:
+                writing.pop()
+
+        return wrapped
+
+    def forbid(name, fn):
+        def wrapped(self, *args, **kwargs):
+            if writing:
+                raise AssertionError(f"{name} inside {writing[-1]}")
+            return fn(self, *args, **kwargs)
+
+        return wrapped
+
+    # the session's concrete DataFrame class defines its own actions
+    cls = type(pages_all)
+    for name in ("count", "collect", "persist"):
+        monkeypatch.setattr(cls, name, forbid(name, getattr(cls, name)))
+    monkeypatch.setattr(_ParquetStore, "put", during_write(_ParquetStore.put))
+    monkeypatch.setattr(
+        CheckpointedDedup, "_log", during_write(CheckpointedDedup._log)
+    )
+
+    stages = ("sketches", "membership", "bands", "pairs")
+
+    def sizes():
+        return {
+            s: spark.read.parquet(os.path.join(root, s)).count() for s in stages
+        }
+
+    CheckpointedDedup(spark, root, params).run(pages_all.limit(150))
+    before = sizes()
+    ck = CheckpointedDedup(spark, root, params)
+    ck.run(pages_all)
+    after = sizes()
+
+    metrics = ck.metrics()
+    assert {m["stage"] for m in metrics} == set(stages) | {"clusters"}
+    for m in metrics:
+        assert m["partitions"], m
+        assert m["rows"] == sum(p["rows"] for p in m["partitions"]), m
+        assert all(p["partition_id"] >= 0 for p in m["partitions"]), m
+    for stage in stages:
+        appends = [m for m in metrics if m["stage"] == stage and m["append"]]
+        assert len(appends) == 1, stage
+        assert appends[0]["rows"] == after[stage] - before[stage], stage
+    (clusters,) = [m for m in metrics if m["stage"] == "clusters"]
+    assert clusters["rows"] == spark.read.parquet(
+        os.path.join(root, "clusters")
+    ).count()
 
 
 def test_incremental_append_collapses_cross_batch_exact_dups(spark, tmp_path):
