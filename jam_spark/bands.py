@@ -9,32 +9,31 @@ one-hash-pass-per-SHINGLE design (``src/sketcher.rs:96-104``; SURVEY
 §2.3.6) — then grouped into ``bands`` bands of ``rows`` rows; docs
 sharing any (band_id, band_hash) become candidate pairs.
 
-    sig[p]        = min over sketch h of fmix64(h ^ seed[p])
+    v             = fmix64(h ^ seed0)            one remix per sketch hash h
+    sig[p]        = min of v in OPH bucket p     (empty buckets densified)
     band_hash[b]  = fmix64(poly-combine(sig[b*rows .. b*rows+rows)) ^ seed'[b])
 
 Empty sketches produce no bands (no candidates — matches the reference,
 where a sketch with no hashes can never reach the postings join).
+
+Two implementations compute the same bits: :func:`band_arrays` (numpy,
+the reference the tests compare against) and :func:`band_keys`, the
+column the pipeline bands with (a Java UDF, ``jvm/BandKeys.java``).
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+from pyspark.sql import Column
 
-from ._malloc import tune_malloc
 from .hashes import M64, _np_fmix64, xxh3_u64
 from .params import SHINGLE_POLY_BASE, SketchParams
-
-tune_malloc()
 
 _U64 = np.uint64
 
 
-def _perm_seeds(params: SketchParams) -> np.ndarray:
-    return np.array(
-        [xxh3_u64((params.sig_seed + p) & M64) for p in range(params.num_perm)],
-        dtype=_U64,
-    )
+def _seed0(params: SketchParams) -> np.uint64:
+    return _U64(xxh3_u64(params.sig_seed & M64))
 
 
 def _band_seeds(params: SketchParams) -> np.ndarray:
@@ -72,8 +71,7 @@ def signature_batch(
     sig = np.full((n_docs, P), _U64(M64), dtype=_U64)
     if len(flat_hashes) == 0:
         return sig
-    seed0 = _U64(xxh3_u64(params.sig_seed & M64))
-    v = _np_fmix64(flat_hashes ^ seed0)
+    v = _np_fmix64(flat_hashes ^ _seed0(params))
     bucket = (
         (v & _U64(P - 1)) if (P & (P - 1)) == 0 else (v % _U64(P))
     ).astype(np.int64)
@@ -148,30 +146,38 @@ def band_arrays(sketches: list[np.ndarray], params: SketchParams) -> list[np.nda
     return out
 
 
-# Why banding stays an Arrow UDF (and is not a JVM column expression
-# like the sketch): the OPH/fmix64 math is wrapping unsigned 64-bit
-# arithmetic. Spark 4 runs with ANSI SQL enabled by default, where long
-# overflow THROWS — expressing fmix64's two wrapping multiplies would
-# require either flipping spark.sql.ansi.enabled globally (a semantic
-# change for every other query) or decomposing each multiply into
-# sub-31-bit pieces (≥16 multiplies each). Measured, the vectorized
-# numpy path is not the pipeline bottleneck (the band stage is ~15s of a
-# 73s 16-core 1M-doc run, most of it the 57M-row explode+persist, not
-# the UDF), so the Arrow path stays.
-def make_band_udf(params: SketchParams):
-    """pandas UDF: sketch array<long> → array<long> of band keys
-    (index in the array IS band_id; empty for empty sketches)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
+# Why banding is a Java UDF (jam_spark/jvm/BandKeys.java) and not a
+# column expression like the sketch: the OPH/fmix64 math is wrapping
+# unsigned 64-bit arithmetic. Java long multiplies and adds wrap, so the
+# class computes exactly the bits of ``band_arrays`` above, and the band
+# keys, the oracle and the table layout stay as they are. Spark SQL long
+# arithmetic throws on overflow under ANSI (the Spark 4 default), and its
+# higher-order functions run interpreted (CodegenFallback): an OPH banding
+# built from transform/filter/array_sort took 13-18 s on 15,696 sketches,
+# where a pandas (Arrow) UDF over band_arrays took 0.5-0.6 s and this
+# class 0.1 s (4-core host, warm JVM). The Java UDF runs in the executor
+# JVM, so the band stage starts no Python worker.
+def band_keys(sketch: Column | str, params: SketchParams) -> Column:
+    """array<bigint> band keys of an array<bigint> sketch column, bit-equal
+    to :func:`band_arrays` (the index in the array IS band_id; empty for
+    empty and null sketches). Needs the jar on the session's classpath
+    (:func:`jam_spark.deploy.ensure_shipped`)."""
+    from pyspark.sql import SparkSession
+    from pyspark.sql.classic import column as classic
 
-    def _bands(sketches: pd.Series) -> pd.Series:
-        arrs = [
-            np.asarray(s, dtype=np.int64).view(_U64)
-            if s is not None and len(s)
-            else np.empty(0, dtype=_U64)
-            for s in sketches
-        ]
-        out = band_arrays(arrs, params)
-        return pd.Series([b.view(np.int64) for b in out])
-
-    return F.pandas_udf(_bands, T.ArrayType(T.LongType()))
+    spark = SparkSession.active()
+    sc = spark.sparkContext
+    # ADD JAR puts the jar on the session's shared class loader and makes
+    # it the context class loader of the JVM thread that ran it; py4j
+    # resolves classes through the context class loader of the JVM thread
+    # that serves the calling Python thread, so set it here as well
+    sc._jvm.java.lang.Thread.currentThread().setContextClassLoader(
+        spark._jsparkSession.sharedState().jarClassLoader()
+    )
+    seeds = _band_seeds(params).view(np.int64).tolist()
+    jseeds = sc._gateway.new_array(sc._jvm.long, len(seeds))
+    for i, s in enumerate(seeds):
+        jseeds[i] = s
+    seed0 = int(_seed0(params).view(np.int64))
+    udf = sc._jvm.jam_spark.jvm.BandKeys(seed0, jseeds, params.num_perm, params.rows)
+    return classic.Column(udf.column(classic._to_java_column(sketch)))

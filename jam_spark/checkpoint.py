@@ -73,6 +73,7 @@ Resume contract:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import time
@@ -153,14 +154,27 @@ class _ParquetStore:
     def put(self, df: DataFrame, stage: str, append: bool) -> list[tuple[int, int]]:
         """Append ``df`` to the table or replace it; ``(partition id,
         rows)`` of each ``part-NNNNN-...`` file the write added, from its
-        footer."""
+        footer. Spark writes a 0-row file when the data is empty; an
+        append removes it (and its checksum), a full write keeps it for
+        the schema."""
         path = self.path(stage)
         before = self._parts(stage) if append else set()
         df.write.mode("append" if append else "overwrite").parquet(path)
-        return [
-            (int(f.split("-")[1]), parquet_footer(os.path.join(path, f)).num_rows)
-            for f in sorted(self._parts(stage) - before)
-        ]
+        added, removed = [], False
+        for f in sorted(self._parts(stage) - before):
+            rows = parquet_footer(os.path.join(path, f)).num_rows
+            if append and rows == 0:
+                for name in (f, f".{f}.crc"):
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(path, name))
+                removed = True
+            else:
+                added.append((int(f.split("-")[1]), rows))
+        if removed:
+            # the write re-planned the cached frames over this table with
+            # a file listing that still holds the removed file
+            self.spark.catalog.refreshByPath(path)
+        return added
 
     def read(self, stage: str) -> DataFrame:
         reader = self.spark.read

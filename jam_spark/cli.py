@@ -10,8 +10,8 @@
     python -m jam_spark.cli stats   --root CKPT            # ≅ jam stats
     python -m jam_spark.cli extract --input pages.parquet --output text.pq
 
-On a cluster: ``spark-submit --py-files jam_spark_pkg.zip -m ...`` with
-the same flags. Sketch parameters mirror the reference's knobs
+On a cluster: ``spark-submit --py-files jam_spark_pkg.zip --jars
+jam_spark/jvm/jam_spark_jvm.jar -m ...`` with the same flags. Sketch parameters mirror the reference's knobs
 (``-k/--kmer-size``, ``--fscale``, ``--nmax``, ``--algorithm``,
 ``--cutoff``) reinterpreted for word-shingles.
 """

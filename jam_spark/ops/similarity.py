@@ -35,10 +35,14 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .._malloc import tune_malloc
 from .._persist import track
 from ..hashes import M64, xxh3_u64
 from ..pairs import cap_hot_keys
 from ..scan import exact_count
+
+# the pandas UDFs below run numpy in Python workers
+tune_malloc()
 
 
 def _dot(a, b):

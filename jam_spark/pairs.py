@@ -26,7 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ._persist import track
-from .bands import make_band_udf
+from .bands import band_keys
 from .params import SketchParams
 
 
@@ -66,13 +66,12 @@ def packed_bands(
     verify), and in the hot-size aggregate it can only OVERCOUNT a
     band — thinning slightly early, never missing a hot band.
     """
-    band_udf = make_band_udf(params)
     bkey = F.shiftleft(F.col("band_id").cast("long"), 58).bitwiseOR(
         F.col("band_hash").bitwiseAND(F.lit(_BKEY_MASK))
     )
     return (
         sketches.select(
-            id_col, F.posexplode(band_udf("sketch")).alias("band_id", "band_hash")
+            id_col, F.posexplode(band_keys("sketch", params)).alias("band_id", "band_hash")
         )
         .select(bkey.alias("bkey"), F.col(id_col))
         .repartition("bkey")

@@ -8,7 +8,7 @@ checkpointed/resumable variant lives in ``checkpoint.py``).
       │  groupBy(text_fp) with map-side combine → exact-dup collapse
       ▼
     sketches (url, sketch array<long>, num_hashes)   — reps only
-      │  band_udf + posexplode → thin hot bands → self-join
+      │  band_keys (Java UDF) + posexplode → thin hot bands → self-join
       ▼
     candidates (id_a, id_b) → verify (array_intersect) → pairs
       │  hash-min connected components

@@ -1,8 +1,9 @@
 """SparkSession factory for local runs (tests, bench, CLI).
 
-On a real cluster the job ships via ``spark-submit --py-files``; nothing
-in the pipeline assumes local mode — partitioning/shuffle behavior is
-driven entirely by the DataFrame plan + AQE.
+On a real cluster the job ships via ``spark-submit --py-files --jars``
+(:mod:`jam_spark.deploy`); nothing in the pipeline assumes local mode —
+partitioning/shuffle behavior is driven entirely by the DataFrame plan +
+AQE.
 """
 
 from __future__ import annotations

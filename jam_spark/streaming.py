@@ -86,10 +86,10 @@ def stream_dedup_from_files(
     pages = reader.parquet(input_dir)
 
     def _ingest(batch_df, batch_id: int) -> None:
-        # an empty replayed batch is a no-op; limit(1) keeps the probe
-        # from scanning the batch twice
-        if batch_df.limit(1).count() == 0:
-            return
+        # no emptiness probe here: run_sketches probes the batch once,
+        # after dropping the urls already ingested, so on a built root an
+        # empty or replayed batch leaves the store untouched (on a fresh
+        # root an empty batch builds empty tables)
         ck.run(batch_df)
 
     writer = (

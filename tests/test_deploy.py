@@ -1,11 +1,14 @@
 """The north_rule's deployment contract: the job ships to a cluster via
-``spark-submit --py-files jam_spark_pkg.zip`` (reference analogue: jam-rs
-is a single static binary, ``/root/reference/README.md`` install section —
-one artifact, no on-node setup). These tests prove the artifact actually
-carries the pipeline: the zip is built, and a full sketch→pairs→clusters
-job runs under real ``spark-submit`` from a cwd OUTSIDE the repo, so
+``spark-submit --py-files jam_spark_pkg.zip --jars jam_spark_jvm.jar``
+(reference analogue: jam-rs is a single static binary,
+``/root/reference/README.md`` install section — one artifact per
+runtime, no on-node setup). These tests prove the artifacts actually
+carry the pipeline: the zip is built, the committed jar is built from
+the committed Java sources, and a full sketch→pairs→clusters job runs
+under real ``spark-submit`` from a cwd OUTSIDE the repo, so
 ``jam_spark.*`` can only resolve from the ``--py-files`` zip on both the
-driver and the Python UDF workers.
+driver and the Python UDF workers, and the band UDF from the ``--jars``
+jar.
 """
 
 import os
@@ -15,7 +18,7 @@ import zipfile
 
 import pyspark
 
-from jam_spark.deploy import build_zip
+from jam_spark.deploy import JAR, build_zip, jvm_sources_sha256
 
 SPARK_SUBMIT = os.path.join(
     os.path.dirname(pyspark.__file__), "bin", "spark-submit"
@@ -72,6 +75,23 @@ def test_build_zip_contains_package_and_is_reused(tmp_path):
     assert z2 == z1 and os.path.getmtime(z2) == mtime  # cached, not rebuilt
 
 
+def test_jar_built_from_committed_sources():
+    """The jar's manifest records the sha256 of the Java sources it was
+    compiled from; rebuild it with ``python tools/build_jvm.py`` after
+    editing them."""
+    with zipfile.ZipFile(JAR) as z:
+        manifest = z.read("META-INF/MANIFEST.MF").decode()
+        names = z.namelist()
+    recorded = dict(
+        line.split(": ", 1) for line in manifest.splitlines() if ": " in line
+    )
+    assert recorded["Source-SHA256"] == jvm_sources_sha256(), (
+        "jam_spark/jvm/*.java changed since the jar was built: "
+        "run python tools/build_jvm.py"
+    )
+    assert "jam_spark/jvm/BandKeys.class" in names
+
+
 def test_spark_submit_py_files_runs_pipeline(tmp_path):
     pkg_zip = build_zip(str(tmp_path))
     job = tmp_path / "job.py"
@@ -85,7 +105,8 @@ def test_spark_submit_py_files_runs_pipeline(tmp_path):
     env["PYSPARK_DRIVER_PYTHON"] = sys.executable
 
     proc = subprocess.run(
-        [SPARK_SUBMIT, "--py-files", pkg_zip, str(job), str(out)],
+        [SPARK_SUBMIT, "--py-files", pkg_zip, "--jars", JAR, str(job),
+         str(out)],
         cwd=str(tmp_path),
         env=env,
         stdout=subprocess.PIPE,

@@ -157,16 +157,93 @@ def test_verify_stage_is_jvm_only(spark):
 
 def test_pairs_stage_plan_has_no_rowwise_python(spark, pages_df):
     """The whole pairs plan (bands → thin → candidates → verify → remap)
-    must contain no row-at-a-time Python (BatchEvalPython); the only
-    Python left in the flagship path is the Arrow-vectorized band UDF
-    (see bands.py for why that one stays)."""
+    evaluates no Python, row-at-a-time (BatchEvalPython) or Arrow
+    (ArrowEvalPython): the band keys come from the Java UDF."""
     from jam_spark.pipeline import pairs_stage, sketch_stage
 
     params = SketchParams()
     sketches, _ = sketch_stage(pages_df.limit(100), params)
     p = pairs_stage(sketches.persist(), params)
     plan = p._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan
+    assert "band_keys" in plan  # the cached bands plan is in the string
+    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_checkpoint_bands_append_plan_has_no_python(
+    spark, pages_df, tmp_path, monkeypatch
+):
+    """The bands table write of a CheckpointedDedup full build and of an
+    append evaluates no Python either."""
+    from jam_spark.checkpoint import CheckpointedDedup, _ParquetStore
+
+    plans = {}
+    put = _ParquetStore.put
+
+    def spy(self, df, stage, append):
+        if stage == "bands":
+            plans[append] = df._jdf.queryExecution().executedPlan().toString()
+        return put(self, df, stage, append)
+
+    monkeypatch.setattr(_ParquetStore, "put", spy)
+    params = SketchParams()
+    pages = pages_df.select("url", "text")
+    root = str(tmp_path / "ck_bands_plan")
+    CheckpointedDedup(spark, root, params).run(pages.limit(150))
+    CheckpointedDedup(spark, root, params).run(pages)
+    assert set(plans) == {False, True}
+    for plan in plans.values():
+        assert "band_keys" in plan
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def _one_bucket_hashes(params: SketchParams, n: int) -> list[int]:
+    """``n`` sketch hashes whose remix all lands in OPH bucket 0."""
+    from jam_spark.bands import _seed0
+    from jam_spark.hashes import _np_fmix64
+
+    cand = np.arange(1, 50_000, dtype=np.uint64) * np.uint64(0x9E3779B97F4A7C15)
+    v = _np_fmix64(cand ^ _seed0(params))
+    hit = cand[v % np.uint64(params.num_perm) == 0][:n]
+    assert len(hit) == n
+    return hit.view(np.int64).tolist()
+
+
+@pytest.mark.parametrize(
+    "params",
+    [SketchParams(), SketchParams(num_perm=96, bands=48, rows=2)],
+    ids=["64x2", "48x2"],
+)
+def test_jvm_band_keys_equal_band_arrays(spark, pages_df, params):
+    """The Java UDF's band keys are bit-equal to ``band_arrays`` on the
+    test corpus and on hostile sketches: empty, null, one hash, negative
+    i64 bit patterns (what xxh3/ahash/murmur3 sketches store), every hash
+    in one OPH bucket, and 256 hashes; 48x2 takes the non-power-of-two
+    bucket path (num_perm 96)."""
+    from jam_spark.bands import band_keys
+
+    sketches, _ = sketch_stage(pages_df, params)
+    rng = np.random.default_rng(5)
+    full_range = dict(low=-(2**63), high=2**63 - 1, dtype=np.int64)
+    hostile = [
+        None,
+        [],
+        [7],
+        [-1],
+        [-(2**63)],
+        rng.integers(size=40, **full_range).tolist(),
+        _one_bucket_hashes(params, 16),
+        rng.integers(size=256, **full_range).tolist(),
+    ]
+    rows = [r["sketch"] for r in sketches.select("sketch").collect()] + hostile
+    df = spark.createDataFrame(list(enumerate(rows)), "i int, sketch array<bigint>")
+    got = dict(df.select("i", band_keys("sketch", params)).collect())
+    want = band_arrays(
+        [np.asarray(s or [], dtype=np.int64).view(np.uint64) for s in rows],
+        params,
+    )
+    assert len(got) == len(rows) > len(hostile)
+    for i, w in enumerate(want):
+        assert got[i] == w.view(np.int64).tolist(), (i, rows[i])
 
 
 def _reference_candidates(nids, sketches, params):

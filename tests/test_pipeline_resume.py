@@ -447,6 +447,42 @@ def test_null_text_pages_kept_and_not_resketched(spark, tmp_path):
     assert got == _clusters_dict(dedup_pipeline(pages_all, params))
 
 
+def test_empty_delta_append_adds_no_file(spark, tmp_path):
+    """An append with an empty delta (its only new page has null text,
+    whose exact group is already sketched) adds no part file to
+    sketches, bands or pairs, and logs 0 rows with no partitions; the
+    labels still equal a from-scratch run."""
+    import pandas as pd
+
+    params = SketchParams()
+    base = spark.createDataFrame(
+        pages_to_pandas(generate_pages(n_docs=60, seed=3))[["url", "text"]]
+    ).unionByName(spark.createDataFrame(
+        pd.DataFrame({"url": ["n1"], "text": [None]}), "url string, text string"
+    ))
+    pages_all = base.unionByName(spark.createDataFrame(
+        pd.DataFrame({"url": ["n2"], "text": [None]}), "url string, text string"
+    ))
+    root = str(tmp_path / "ck_empty_delta")
+    CheckpointedDedup(spark, root, params).run(base)
+    stages = ("sketches", "bands", "pairs")
+
+    def files(stage):
+        return sorted(os.listdir(os.path.join(root, stage)))
+
+    before = {s: files(s) for s in stages}
+    ck = CheckpointedDedup(spark, root, params)
+    got = _clusters_dict(ck.run(pages_all))
+    for stage in stages:
+        assert files(stage) == before[stage], stage
+        (append,) = [
+            m for m in ck.metrics() if m["stage"] == stage and m["append"]
+        ]
+        assert (append["rows"], append["partitions"]) == (0, []), stage
+    assert got["n2"] == got["n1"]
+    assert got == _clusters_dict(dedup_pipeline(pages_all, params))
+
+
 def _crash_on_close(monkeypatch, stage):
     """Make the next close of ``stage``'s append window raise: the crash
     lands after the stage's table write, before its epoch is recorded."""

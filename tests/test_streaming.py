@@ -15,9 +15,18 @@ from jam_spark.params import SketchParams
 from jam_spark.pipeline import dedup_pipeline
 from jam_spark.streaming import drain_landing_zone, stream_dedup_from_files
 
+_PAGES_ARROW = pa.schema([("url", pa.string()), ("text", pa.string())])
+
 
 def _land(pdf, path):
-    pq.write_table(pa.Table.from_pandas(pdf[["url", "text"]]), path)
+    """Write ``pdf``'s pages as one landing-zone parquet file (typed even
+    when ``pdf`` has no rows)."""
+    pq.write_table(
+        pa.Table.from_pandas(
+            pdf[["url", "text"]], schema=_PAGES_ARROW, preserve_index=False
+        ),
+        path,
+    )
 
 
 def _clusters_dict(df):
@@ -118,3 +127,38 @@ def test_stream_bounded_batches_converge(spark, tmp_path):
         dedup_pipeline(spark.createDataFrame(pdf[["url", "text"]]), params)
     )
     assert got == want
+
+
+def test_empty_batches_end_in_from_scratch_labels(spark, tmp_path):
+    """Each micro-batch is probed for emptiness once (``run_sketches``,
+    after dropping known urls): an empty first batch on a fresh root,
+    then an empty batch and a replayed batch on the built root, all end
+    in the from-scratch labels, and the later two write nothing."""
+    from jam_spark.checkpoint import CheckpointedDedup
+
+    params = SketchParams()
+    pdf = pages_to_pandas(generate_pages(n_docs=120, seed=7))[["url", "text"]]
+    landing = tmp_path / "landing"
+    landing.mkdir()
+    root = str(tmp_path / "state")
+
+    def land_and_drain(part, name):
+        _land(part, str(landing / name))
+        return drain_landing_zone(spark, str(landing), root, params)
+
+    land_and_drain(pdf.iloc[:0], "f0.parquet")
+    ck = land_and_drain(pdf.iloc[:100], "f1.parquet")
+    metrics = ck.metrics()
+    with open(os.path.join(root, "progress.json")) as f:
+        progress = f.read()
+    land_and_drain(pdf.iloc[:0], "f2.parquet")
+    ck = land_and_drain(pdf.iloc[40:100], "f3.parquet")
+    assert ck.metrics() == metrics
+    with open(os.path.join(root, "progress.json")) as f:
+        assert f.read() == progress
+
+    land_and_drain(pdf.iloc[100:], "f4.parquet")
+    got = _clusters_dict(CheckpointedDedup(spark, root, params).run(
+        spark.createDataFrame(pdf)
+    ))
+    assert got == _clusters_dict(dedup_pipeline(spark.createDataFrame(pdf), params))
